@@ -4,6 +4,8 @@ exercised, counts exact, metrics landed, survivors intact."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from text_retrieval_and_search_engines_spark.operators.curate import (
@@ -60,7 +62,7 @@ def test_curate_drops_every_reason_and_records_metrics(spark, planted,
     assert by[("curate_minhash_lsh", "dropped_rows")] == 0
     # ...and the estimate-prefilter report (candidates counted, bar +
     # calibrated loss bound recorded — no silent truncation)
-    assert by[("curate_minhash_prefilter", "candidates_in")] >= \
+    assert by[("curate_minhash_prefilter", "band_collisions_in")] >= \
         by[("curate_minhash_prefilter", "candidates_pruned")]
     assert by[("curate_minhash_prefilter", "min_matches")] == 8  # thr 0.5
     assert 0 < by[("curate_minhash_prefilter", "true_pair_loss_ppm")] <= 2000
@@ -168,10 +170,10 @@ def test_curate_optional_stages_redact_decontam_dupspan(spark, tmp_path):
     assert by[("curate", "dropped_dup_spans")] == 2
 
 
-def test_lsh_prefiltered_pairs_kernel_matches_join(spark, monkeypatch):
-    """r6: the vectorized Arrow pair kernel and the JVM self-join produce
-    the IDENTICAL prefiltered pair set and bucket sizes (the kernel is a
-    pure implementation swap — same band keys, same integer match bar)."""
+def test_lsh_prefiltered_pairs_kernel_matches_join(spark, lsh_reference):
+    """The Arrow bucket-walk kernel produces exactly the prefiltered pair
+    set and cap-surviving bucket sizes of the brute-force reference (same
+    band keys, same integer match bar, in pure Python)."""
     import random
 
     from text_retrieval_and_search_engines_spark.operators import dedup
@@ -198,24 +200,21 @@ def test_lsh_prefiltered_pairs_kernel_matches_join(spark, monkeypatch):
     sigs = spark.createDataFrame(rows, schema)
     bar = dedup.prefilter_min_matches(0.8, width)
 
-    out = {}
-    for impl in ("kernel", "join"):
-        monkeypatch.setattr(dedup, "_PAIR_IMPL", impl)
-        pairs, sizes = dedup.minhash_lsh_prefiltered_pairs(
-            sigs, min_matches=bar)
-        out[impl] = (sorted((r["doc_a"], r["doc_b"])
-                            for r in pairs.collect()),
-                     sorted((r["band_id"], r["band_key"], r["bucket_n"])
-                            for r in sizes.collect()))
-    assert out["kernel"][0] == out["join"][0]
-    assert out["kernel"][1] == out["join"][1]
-    assert len(out["kernel"][0]) >= 20      # the tight clusters survive
+    pairs, sizes = dedup.minhash_lsh_prefiltered_pairs(sigs, min_matches=bar)
+    want, _, want_sizes = lsh_reference(sigs, bar=bar)
+    got = sorted((r["doc_a"], r["doc_b"]) for r in pairs.collect())
+    assert got == sorted(want)
+    assert sorted((r["band_id"], r["band_key"], r["bucket_n"])
+                  for r in sizes.collect()) == \
+        sorted((b, k, n) for (b, k), n in want_sizes.items())
+    assert len(got) >= 20      # the tight clusters survive
+    assert len(got) < 60       # the below-bar members are pruned
 
 
-def test_lsh_prefiltered_pairs_kernel_string_ids(spark, monkeypatch):
-    """String doc ids (the curate-by-url path) go through the kernel's
-    fixed-width-bytes branch; pair set and orientation (a < b in UTF8
-    byte order — orientation picks the DROPPED doc) match the join."""
+def test_lsh_prefiltered_pairs_kernel_string_ids(spark, lsh_reference):
+    """String doc ids (the curate-by-url path): pair set and orientation
+    (a < b in UTF-8 byte order — orientation picks the DROPPED doc) match
+    the reference's Python string order."""
     import random
 
     from text_retrieval_and_search_engines_spark.operators import dedup
@@ -232,22 +231,17 @@ def test_lsh_prefiltered_pairs_kernel_string_ids(spark, monkeypatch):
               + ", ".join(f"mh_{j} long" for j in range(width)))
     sigs = spark.createDataFrame(rows, schema)
     bar = dedup.prefilter_min_matches(0.8, width)
-    out = {}
-    for impl in ("kernel", "join"):
-        monkeypatch.setattr(dedup, "_PAIR_IMPL", impl)
-        pairs, _ = dedup.minhash_lsh_prefiltered_pairs(sigs,
-                                                       min_matches=bar)
-        out[impl] = sorted((r["doc_a"], r["doc_b"])
-                           for r in pairs.collect())
-    assert out["kernel"] == out["join"]
-    assert len(out["kernel"]) == 12
-    assert all(a < b for a, b in out["kernel"])
+    pairs, _ = dedup.minhash_lsh_prefiltered_pairs(sigs, min_matches=bar)
+    got = sorted((r["doc_a"], r["doc_b"]) for r in pairs.collect())
+    assert got == sorted(lsh_reference(sigs, bar=bar)[0])
+    assert len(got) == 12
+    assert all(a < b for a, b in got)
 
 
-def test_vs_base_kernel_matches_join(spark, monkeypatch):
-    """r6: the two-sided (new x base) pair kernel produces the identical
-    (doc_a, doc_b, est_matches) set as the join shape, string ids
-    included (the append path's url keys)."""
+def test_vs_base_kernel_matches_join(spark, lsh_reference):
+    """The two-sided (new x base) walk produces exactly the reference's
+    (doc_a, doc_b, est_matches) set, string ids included (the append
+    path's url keys), with the base-side cap report."""
     import random
 
     from text_retrieval_and_search_engines_spark.operators import dedup
@@ -277,11 +271,126 @@ def test_vs_base_kernel_matches_join(spark, monkeypatch):
     new = spark.createDataFrame(sig_rows("new", 30, base_sigs_py[:10]),
                                 schema)
     bar = dedup.prefilter_min_matches(0.8, width)
-    out = {}
-    for impl in ("kernel", "join"):
-        monkeypatch.setattr(dedup, "_PAIR_IMPL", impl)
-        df = dedup.minhash_neardup_vs_base(new, base, min_matches=bar)
-        out[impl] = sorted((r["doc_a"], r["doc_b"], r["est_matches"])
-                           for r in df.collect())
-    assert out["kernel"] == out["join"]
-    assert len(out["kernel"]) >= 8       # the planted near-dups matched
+    report: dict = {}
+    df = dedup.minhash_neardup_vs_base(new, base, min_matches=bar,
+                                       drop_report=report)
+    got = sorted((r["doc_a"], r["doc_b"], r["est_matches"])
+                 for r in df.collect())
+    want, want_report, _ = lsh_reference(new, base, bar=bar)
+    assert got == sorted((a, b, m) for (a, b), m in want.items())
+    assert report == want_report
+    assert len(got) >= 8       # the planted near-dups matched
+
+
+# non-ASCII ids: Latin-1 accent, CJK, emoji (1-, 3- and 4-byte UTF-8)
+UTF8_URLS = ["https://x/café", "https://x/日本語", "https://x/🦊"]
+
+
+def _utf8_sig_frames(spark, width):
+    """Base frame of the UTF8_URLS (+ an ASCII url) and a new frame of
+    '?near' twins sharing every component, so each url pairs."""
+    import random
+    rng = random.Random(3)
+    base = [(u, *[rng.getrandbits(40) for _ in range(width)])
+            for u in UTF8_URLS + ["https://x/plain"]]
+    schema = ("doc_id string, "
+              + ", ".join(f"mh_{j} long" for j in range(width)))
+    new = [(r[0] + "?near", *r[1:]) for r in base]
+    return (spark.createDataFrame(base, schema),
+            spark.createDataFrame(new, schema))
+
+
+def test_lsh_prefiltered_pairs_non_ascii_string_ids(spark, lsh_reference):
+    """Non-ASCII string ids travel through the kernel as UTF-8 bytes
+    (a fixed-width ASCII encoding raised UnicodeEncodeError) and come
+    back as the same strings, oriented by code-point order."""
+    from text_retrieval_and_search_engines_spark.operators import dedup
+
+    base, new = _utf8_sig_frames(spark, dedup.PREFILTER_N)
+    sigs = base.unionByName(new)
+    bar = dedup.prefilter_min_matches(0.8, dedup.PREFILTER_N)
+    pairs, _ = dedup.minhash_lsh_prefiltered_pairs(sigs, min_matches=bar)
+    got = sorted((r["doc_a"], r["doc_b"]) for r in pairs.collect())
+    assert got == sorted(lsh_reference(sigs, bar=bar)[0])
+    assert {(u, u + "?near") for u in UTF8_URLS} <= set(got)
+
+
+def test_vs_base_non_ascii_string_ids(spark, lsh_reference):
+    """The two-sided walk carries non-ASCII url ids on both sides."""
+    from text_retrieval_and_search_engines_spark.operators import dedup
+
+    base, new = _utf8_sig_frames(spark, dedup.PREFILTER_N)
+    got = {(r["doc_a"], r["doc_b"]): r["est_matches"]
+           for r in dedup.minhash_neardup_vs_base(new, base).collect()}
+    bar = dedup.prefilter_min_matches(0.8, dedup.PREFILTER_N)
+    assert got == lsh_reference(new, base, bar=bar)[0]
+    assert got[("https://x/🦊?near", "https://x/🦊")] == dedup.PREFILTER_N
+
+
+def test_lsh_pairs_reject_unsupported_id_types(spark):
+    """The kernel carries int, long and string ids only: another id type,
+    or a string/number mix between new and base, raises TypeError naming
+    the types instead of switching algorithm; int vs long widens."""
+    from text_retrieval_and_search_engines_spark.operators import dedup
+
+    cols = ", ".join(f"mh_{j} long" for j in range(8))
+    row = tuple(range(8))
+    dbl = spark.createDataFrame([(1.0, *row)], f"doc_id double, {cols}")
+    with pytest.raises(TypeError, match="double"):
+        dedup.minhash_lsh_prefiltered_pairs(dbl, min_matches=0)
+    strs = spark.createDataFrame([("a", *row)], f"doc_id string, {cols}")
+    longs = spark.createDataFrame([(1, *row)], f"doc_id long, {cols}")
+    with pytest.raises(TypeError, match="string vs bigint"):
+        dedup.minhash_neardup_vs_base(strs, longs)
+    ints = spark.createDataFrame([(2, *row)], f"doc_id int, {cols}")
+    pairs = dedup.minhash_neardup_vs_base(ints, longs)
+    assert pairs.schema["doc_a"].dataType.simpleString() == "bigint"
+    assert [(r["doc_a"], r["doc_b"]) for r in pairs.collect()] == [(2, 1)]
+
+
+@settings(max_examples=10, deadline=None)
+@given(data=st.data())
+def test_lsh_pair_kernel_matches_reference_property(spark, lsh_reference,
+                                                    data):
+    """Random signatures (small value alphabet, so bands collide), long or
+    non-ASCII string ids, a random bar and a random cap: both walk modes
+    equal the brute-force reference, drop reports included."""
+    from text_retrieval_and_search_engines_spark.operators import dedup
+
+    width = 6
+    string_ids = data.draw(st.booleans(), label="string_ids")
+    ids = data.draw(st.lists(
+        st.text(alphabet="aé日🦊", min_size=1, max_size=3) if string_ids
+        else st.integers(-2**40, 2**40), min_size=2, max_size=14,
+        unique=True), label="ids")
+    sig = st.lists(st.integers(0, 2), min_size=width, max_size=width)
+    rows = [(i, *data.draw(sig)) for i in ids]
+    bar = data.draw(st.integers(0, width), label="bar")
+    max_bucket = data.draw(st.integers(0, 6), label="max_bucket")
+    # new = rows[:split], base = rows[lo:]: overlapping ids exercise a != b
+    split = data.draw(st.integers(1, len(rows) - 1), label="split")
+    lo = data.draw(st.integers(0, split), label="lo")
+    schema = (f"doc_id {'string' if string_ids else 'long'}, "
+              + ", ".join(f"mh_{j} long" for j in range(width)))
+    sigs = spark.createDataFrame(rows, schema)
+    new = spark.createDataFrame(rows[:split], schema)
+    base = spark.createDataFrame(rows[lo:], schema)
+
+    rep: dict = {}
+    pairs, _ = dedup.minhash_lsh_prefiltered_pairs(
+        sigs, bar, n_hashes=4, bands=2, max_bucket=max_bucket,
+        drop_report=rep)
+    want, want_rep, _ = lsh_reference(sigs, bar=bar, n_hashes=4, bands=2,
+                                      max_bucket=max_bucket)
+    assert sorted(tuple(r) for r in pairs.collect()) == sorted(want)
+    assert rep == want_rep
+
+    rep2: dict = {}
+    vs = dedup.minhash_neardup_vs_base(
+        new, base, n_hashes=4, bands=2, min_matches=bar,
+        max_bucket=max_bucket, drop_report=rep2)
+    want2, want_rep2, _ = lsh_reference(new, base, bar=bar, n_hashes=4,
+                                        bands=2, max_bucket=max_bucket)
+    assert sorted(tuple(r) for r in vs.collect()) == \
+        sorted((a, b, m) for (a, b), m in want2.items())
+    assert rep2 == want_rep2

@@ -138,6 +138,33 @@ def test_filter_update_state_tag_is_idempotent(spark, base_catalog):
     assert n == 2
 
 
+def test_filter_appended_neardups_non_ascii_urls(spark, tmp_path):
+    """Url ids with accented, CJK and emoji characters pass through both
+    pair walks (new x base and within-batch) and the drops pick the right
+    docs: the base near-dup, and the code-point-larger twin."""
+    base = spark.createDataFrame(
+        [(u, _text(i)) for i, u in enumerate(
+            ["https://x/café", "https://x/日本語", "https://x/🦊",
+             "https://x/plain"])], "url string, text string")
+    catalog = Catalog(str(tmp_path / "utf8cat"))
+    curate.curate_corpus(spark, base, catalog, KEEP_ALL, id_col="url",
+                         text_col="text", write_state=True)
+    batch = spark.createDataFrame(
+        [("https://x/日本語?near", "changed999 " + _text(1).split(" ", 1)[1]),
+         ("https://x/ü-fresh", " ".join(f"zz{i}novel{i * 13}"
+                                        for i in range(40))),
+         ("https://x/🦊a", _text(77)),
+         ("https://x/🦊b", "mutated888 " + _text(77).split(" ", 1)[1])],
+        "url string, text string")
+    kept, stats = curate.filter_appended_neardups(
+        spark, batch, catalog, id_col="url", text_col="text")
+    assert stats["dropped_near_base"] == 1
+    assert stats["dropped_within_batch"] == 1
+    assert {r["url"] for r in kept.collect()} == {"https://x/ü-fresh",
+                                                  "https://x/🦊a"}
+    kept.unpersist()
+
+
 def test_minhash_neardup_vs_base_estimates(spark):
     """The cross-frame estimator: a planted near-pair passes the bar, an
     unrelated pair does not, and self-ids are excluded."""

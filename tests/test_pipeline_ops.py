@@ -417,8 +417,9 @@ def test_lsh_dim_param_skips_probe_job(spark, monkeypatch):
 
 def test_dedup_drop_report_lands_in_metrics_table(spark, tmp_path):
     """VERDICT r3 item 6: the bucket-cap drop volume must land in the
-    catalog's metrics table via the pipeline-path wrappers, so silent
-    truncation can never read as full coverage."""
+    catalog's metrics table (record_drop_report and the simhash
+    pipeline-path wrapper), so silent truncation can never read as full
+    coverage."""
     from text_retrieval_and_search_engines_spark.sources.tables import Catalog
 
     docs = spark.createDataFrame(
@@ -428,9 +429,9 @@ def test_dedup_drop_report_lands_in_metrics_table(spark, tmp_path):
     sig = dedup.minhash_signatures(dedup.char_shingles(docs))
 
     cat = Catalog(str(tmp_path / "mcat"))
-    pairs = dedup.minhash_lsh_pairs_with_metrics(
-        spark, cat, sig, max_bucket=5)
-    pairs.collect()
+    report: dict = {}
+    dedup.minhash_lsh_pairs(sig, max_bucket=5, drop_report=report).collect()
+    dedup.record_drop_report(spark, cat, report, "dedup_minhash_lsh")
 
     m = cat.read_table(spark, "metrics").collect()
     by_metric = {r["metric"]: r["value"] for r in m
@@ -529,17 +530,12 @@ def test_ivf_sim_round_pins_ties_to_lowest_centroid(spark):
         assert r["cosine"] == round(r["cosine"], 6)
 
 
-def test_cap_buckets_window_impl_matches_join_and_cuts_exchanges(spark):
-    """The default-on bucket cap must not double the dedup plan: the
-    "window" impl computes bucket sizes with one count-over-window
-    exchange (whose partitioning the band self-join reuses), the legacy
-    "join" impl sizes buckets with a groupBy + semi-join. Results (and
-    drop reports) must be identical. r6 note: the explode-based
-    _band_buckets removed the per-band union that used to duplicate the
-    signature subtree in the JOIN impl, so the two plans are now within
-    a couple of exchanges of each other — the old strictly-smaller
-    assertion is relaxed accordingly (window stays the default for the
-    exchange reuse, which the executed plan confirms at runtime)."""
+def test_cap_buckets_window_impl_matches_join_and_cuts_exchanges(
+        spark, lsh_reference):
+    """The default-on bucket cap must not add a shuffle: bucket sizes
+    come from one count-over-window exchange whose hash partitioning the
+    bucket walk's repartition reuses. Pairs and the drop report equal
+    the brute-force reference."""
     rows = [(i, "dup dup dup common boilerplate text here")
             for i in range(30)]
     rows += [(100 + i, f"unique document number {i} with words {i * 7}")
@@ -547,58 +543,69 @@ def test_cap_buckets_window_impl_matches_join_and_cuts_exchanges(spark):
     d = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = dedup.minhash_signatures(dedup.char_shingles(d)).cache()
     try:
-        res, plans, reports = {}, {}, {}
-        orig = dedup._CAP_IMPL
-        for impl in ("window", "join"):
-            dedup._CAP_IMPL = impl
-            rep: dict = {}
-            df = dedup.minhash_lsh_pairs(sigs, max_bucket=10,
-                                         drop_report=rep)
-            res[impl] = sorted(tuple(r) for r in df.collect())
-            reports[impl] = rep
-            plans[impl] = (df._jdf.queryExecution().executedPlan()
-                           .toString().count("Exchange"))
-        dedup._CAP_IMPL = orig
-        assert res["window"] == res["join"]
-        assert reports["window"] == reports["join"]
-        assert reports["window"]["dropped_rows"] > 0  # cap really fired
-        assert plans["window"] <= plans["join"] + 2
+        # one band-row exchange with or without the cap: the walk's
+        # repartition is satisfied by the window's hash partitioning
+        # (checked before the drop report persists the sized frame)
+        for cap in (10, 0):
+            plan = (dedup.minhash_lsh_pairs(sigs, max_bucket=cap)
+                    ._jdf.queryExecution().executedPlan().toString())
+            assert plan.count("hashpartitioning(band_id") == 1, cap
+        rep: dict = {}
+        df = dedup.minhash_lsh_pairs(sigs, max_bucket=10, drop_report=rep)
+        want, want_rep, _ = lsh_reference(sigs, max_bucket=10)
+        assert sorted(tuple(r) for r in df.collect()) == sorted(want)
+        assert rep == want_rep
+        assert rep["dropped_rows"] > 0  # cap really fired
     finally:
         sigs.unpersist()
 
 
-def test_sig_prefilter_preserves_verified_pairs_and_prunes(spark, docs):
-    """The estimate prefilter must (a) pass every pair the exact verify
-    accepts at the threshold, (b) actually prune estimate-implausible
-    candidates fed to the shingle join."""
-    sub = docs.filter("doc_id < 7")
-    sh = dedup.char_shingles(sub)
-    sig = dedup.minhash_signatures(sh).persist()
-    pairs = dedup.minhash_lsh_pairs(sig)
-    # union in implausible candidates LSH would never emit (unrelated docs)
-    fake = spark.createDataFrame([(0, 5), (0, 6), (3, 6), (4, 5)],
-                                 "doc_a long, doc_b long")
-    all_pairs = pairs.union(fake).distinct()
-    exact = {(r["doc_a"], r["doc_b"])
-             for r in dedup.ngram_jaccard_pairs(
-                 sh, all_pairs, threshold=0.8).collect()}
-    with_pref = {(r["doc_a"], r["doc_b"])
-                 for r in dedup.ngram_jaccard_pairs(
-                     sh, all_pairs, threshold=0.8, sigs=sig).collect()}
-    assert with_pref == exact          # no verified pair lost
-    kept = dedup.sig_prefilter_pairs(
-        all_pairs, sig, dedup.prefilter_min_matches(0.8, 8)).collect()
-    n_kept = len(kept)
-    assert n_kept < all_pairs.count()  # the fakes are pruned pre-verify
-    assert {(r["doc_a"], r["doc_b"]) for r in kept} >= exact
-    # the wide estimate signature prunes at least as hard, still losslessly
-    sig32 = dedup.minhash_signatures(sh, n_hashes=32)
-    kept32 = {(r["doc_a"], r["doc_b"])
-              for r in dedup.sig_prefilter_pairs(
-                  all_pairs, sig32,
-                  dedup.prefilter_min_matches(0.8, 32)).collect()}
-    assert len(kept32) <= n_kept and kept32 >= exact
-    sig.unpersist()
+def test_sig_prefilter_preserves_verified_pairs_and_prunes(spark):
+    """The estimate prefilter inside minhash_lsh_prefiltered_pairs must
+    (a) keep every LSH candidate the exact verify accepts at the
+    threshold, (b) actually prune estimate-implausible candidates before
+    the shingle join. Corpus: 8 random docs, each with a one-word-edit
+    copy (Jaccard ~0.9) and a half-rewritten copy (Jaccard ~0.3) whose
+    band collisions the bar should reject."""
+    import random
+
+    rng = random.Random(21)
+    vocab = [f"w{i}" for i in range(60)]
+    rows = []
+    for i in range(8):
+        toks = [rng.choice(vocab) for _ in range(30)]
+        rows += [(10 * i, " ".join(toks)),
+                 (10 * i + 1, " ".join(toks[:-1] + ["zz"])),
+                 (10 * i + 2, " ".join(toks[:15] + [rng.choice(vocab)
+                                                    for _ in range(15)]))]
+    sh = dedup.char_shingles(
+        spark.createDataFrame(rows, "doc_id long, text string")).persist()
+    sig8 = dedup.minhash_signatures(sh).persist()
+    sig32 = dedup.minhash_signatures(sh, n_hashes=32).persist()
+    try:
+        cands = dedup.minhash_lsh_pairs(sig8)
+
+        def keys(df):
+            return {(r["doc_a"], r["doc_b"]) for r in df.collect()}
+
+        exact = keys(dedup.ngram_jaccard_pairs(sh, cands, threshold=0.8))
+        kept = {n: keys(dedup.minhash_lsh_prefiltered_pairs(
+                    sig, dedup.prefilter_min_matches(0.8, n))[0])
+                for n, sig in ((8, sig8), (32, sig32))}
+        assert len(exact) >= 8
+        assert exact <= kept[8] <= keys(cands)    # no verified pair lost
+        assert exact <= kept[32] <= keys(cands)
+        # the wide estimate signature prunes at least as hard, and does
+        # prune: implausible band collisions never reach the verify
+        assert len(kept[32]) <= len(kept[8])
+        assert len(kept[32]) < len(keys(cands))
+        assert keys(dedup.ngram_jaccard_pairs(
+            sh, dedup.minhash_lsh_prefiltered_pairs(
+                sig32, dedup.prefilter_min_matches(0.8, 32))[0],
+            threshold=0.8)) == exact
+    finally:
+        for df in (sh, sig8, sig32):
+            df.unpersist()
 
 
 def test_prefilter_bar_is_loss_calibrated():
@@ -628,61 +635,30 @@ def test_prefilter_bar_is_loss_calibrated():
 
 
 def test_zero_bar_prefilter_is_a_noop(spark, docs):
+    """A bar of 0 — the calibrated answer when no bar meets the loss
+    bound (low threshold, narrow signature) — prunes nothing: the
+    prefiltered pairs are exactly the plain LSH candidates."""
     sub = docs.filter("doc_id < 7")
-    sh = dedup.char_shingles(sub)
-    sig = dedup.minhash_signatures(sh)
-    pairs = dedup.minhash_lsh_pairs(sig)
-    kept = dedup.sig_prefilter_pairs(pairs, sig, 0)
-    assert kept.count() == pairs.count()
-    # threshold too low for the width -> ngram_jaccard_pairs prunes
-    # nothing rather than silently dropping true pairs
-    nopref = dedup.ngram_jaccard_pairs(sh, pairs, threshold=0.3).collect()
-    withsig = dedup.ngram_jaccard_pairs(sh, pairs, threshold=0.3,
-                                        sigs=sig).collect()
-    assert sorted(map(tuple, nopref)) == sorted(map(tuple, withsig))
+    sig = dedup.minhash_signatures(dedup.char_shingles(sub))
+    bar = dedup.prefilter_min_matches(0.3, 8)
+    assert bar == 0
+    pairs, _ = dedup.minhash_lsh_prefiltered_pairs(sig, bar)
+    want = sorted(map(tuple, dedup.minhash_lsh_pairs(sig).collect()))
+    assert sorted(map(tuple, pairs.collect())) == want
+    assert (0, 1) in want
 
 
-def test_sig_prefilter_passes_pairs_with_missing_signatures(spark):
-    """ADVICE r4: the public ngram_jaccard_pairs(sigs=...) API accepts
-    externally-built candidate pairs; a pair referencing a doc_id absent
-    from the sigs frame must pass THROUGH the estimate prefilter to the
-    exact verify, never be silently pruned."""
-    docs = spark.createDataFrame(
-        [(0, "alpha beta gamma delta epsilon words shared by this pair ok"),
-         (1, "alpha beta gamma delta epsilon words shared by this pair yes")],
-        "doc_id long, text string")
-    sigs = dedup.minhash_signatures(dedup.char_shingles(docs),
-                                    n_hashes=dedup.PREFILTER_N)
-    # external pairs: one in-sigs pair + two referencing doc 7 (no sigs)
-    pairs = spark.createDataFrame([(0, 1), (0, 7), (7, 9)],
-                                  "doc_a long, doc_b long")
-    kept = {(r["doc_a"], r["doc_b"])
-            for r in dedup.sig_prefilter_pairs(pairs, sigs, 19).collect()}
-    assert (0, 7) in kept and (7, 9) in kept          # pass-through
-    assert (0, 1) in kept                             # near-identical pair
-
-    # and the exact verify then decides: docs without shingles simply
-    # produce no jaccard row (inner join on shingles), with no crash
-    sh = dedup.char_shingles(docs)
-    out = {(r["doc_a"], r["doc_b"])
-           for r in dedup.ngram_jaccard_pairs(
-               sh, pairs, threshold=0.5, sigs=sigs).collect()}
-    assert (0, 1) in out and (0, 7) not in out
-
-
-def test_cap_bucket_report_shares_the_window_count(spark):
-    """VERDICT r4 item 6: with the window impl, the drop report derives
-    from the SAME count-over-window column the cap filters on — the sized
-    frame is persisted by the report pass, so the downstream self-join
-    reads the cache (InMemoryTableScan) instead of recomputing the
-    bucket subtree."""
+def test_cap_bucket_report_shares_the_window_count(spark, lsh_reference):
+    """VERDICT r4 item 6: the drop report derives from the SAME
+    count-over-window column the cap filters on — the sized frame is
+    persisted by the report pass, so the downstream bucket walk reads the
+    cache (InMemoryTableScan) instead of recomputing the bucket subtree."""
     rows = [(i, "mega bucket boilerplate text identical") for i in range(30)]
     rows += [(100 + i, f"unique doc {i} tail {i * 13}") for i in range(5)]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = dedup.minhash_signatures(dedup.char_shingles(d))
     caches: list = []
     rep: dict = {}
-    assert dedup._CAP_IMPL == "window"
     pairs = dedup.minhash_lsh_pairs(sigs, max_bucket=10, drop_report=rep,
                                     cache_registry=caches)
     try:
@@ -690,16 +666,8 @@ def test_cap_bucket_report_shares_the_window_count(spark):
         plan = pairs._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan
         assert len(caches) == 1 and caches[0].is_cached
-        # report must equal the legacy groupBy-sizes derivation
-        orig = dedup._CAP_IMPL
-        try:
-            dedup._CAP_IMPL = "join"
-            rep2: dict = {}
-            dedup.minhash_lsh_pairs(sigs, max_bucket=10,
-                                    drop_report=rep2).count()
-            assert rep2 == rep
-        finally:
-            dedup._CAP_IMPL = orig
+        # report equals the brute-force bucket count
+        assert rep == lsh_reference(sigs, max_bucket=10)[1]
     finally:
         for c in caches:
             c.unpersist()

@@ -84,16 +84,10 @@ def test_stopword_set_is_lucene_default():
     assert {"the", "and", "was", "will", "such"} <= STOPWORDS
 
 
-import pytest
-
-
-@pytest.mark.parametrize("kernel", ["python", "arrow"])
-def test_tokenize_docs_matches_scalar_twin(spark, kernel):
-    """BOTH tokenize_docs kernels (r4) must agree with the pinned scalar
+def test_tokenize_docs_matches_scalar_twin(spark):
+    """The tokenize_docs kernel must agree with the pinned scalar
     analyzer per doc: same token MULTISET {term: tf}, same dl (tokens
-    after stop removal), zero-token docs keep a (dl=0, []) row. The arrow
-    kernel additionally emits lists sorted lexicographically by stemmed
-    term (deterministic, not contractual downstream)."""
+    after stop removal), zero-token docs keep a (dl=0, []) row."""
     from text_retrieval_and_search_engines_spark.functions.text import (
         term_freqs)
     from text_retrieval_and_search_engines_spark.plans.index_build import (
@@ -113,7 +107,7 @@ def test_tokenize_docs_matches_scalar_twin(spark, kernel):
 
     for analyzer in ("english", "simple"):
         out = {r["docid"]: r for r in
-               tokenize_docs(docs, analyzer, kernel=kernel).collect()}
+               tokenize_docs(docs, analyzer).collect()}
         assert set(out) == set(range(len(texts)))   # every doc keeps a row
         for i, t in enumerate(texts):
             toks = tokenize("" if t is None else t,
@@ -123,5 +117,3 @@ def test_tokenize_docs_matches_scalar_twin(spark, kernel):
             got = dict(zip(out[i]["terms"], out[i]["tfs"]))
             assert got == want, (analyzer, i)
             assert out[i]["dl"] == len(toks), (analyzer, i)
-            if kernel == "arrow":
-                assert list(out[i]["terms"]) == sorted(out[i]["terms"])

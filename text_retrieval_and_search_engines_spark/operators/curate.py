@@ -238,13 +238,10 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, catalog,
             bar = dedup.prefilter_min_matches(
                 cfg.jaccard, dedup.PREFILTER_N, cfg.prefilter_max_loss)
             # r6 (VERDICT r5 item 1): banded LSH with the estimate
-            # prefilter applied INLINE in the bucket self-join — the
-            # collision volume (139.5M pairs at sf1.0, 2,800/doc) no
-            # longer transits ANY exchange; only band rows and the
-            # prefilter survivors move. Provably the same surviving pair
-            # set as the old distinct -> sig_prefilter_pairs composition
-            # (same mh components, same integer bar), so the verified
-            # pairs, losers and curated output are value-identical.
+            # prefilter applied INLINE in the bucket walk — the
+            # collision volume (139.5M pairs at sf1.0, 2,800/doc) never
+            # transits an exchange; only band rows and the prefilter
+            # survivors move.
             cap_report: dict = {}
             pref, bucket_sizes = dedup.minhash_lsh_prefiltered_pairs(
                 est_sigs, min_matches=bar,
@@ -259,9 +256,9 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, catalog,
             # cap-surviving bucket sizes as sum n*(n-1)/2 — never
             # materialized), the calibrated loss bound AND the
             # exact-verified pair count land in the metrics table.
-            # `candidates_in` now counts band collisions (pre-distinct);
-            # the old distinct-candidate count would itself cost the
-            # O(candidates) exchange this change removes.
+            # `band_collisions_in` counts band collisions (pre-distinct);
+            # a distinct-candidate count would itself cost the
+            # O(candidates) exchange the inline prefilter avoids.
             n_cand = int(bucket_sizes.agg(F.coalesce(
                 F.sum(F.col("bucket_n") * (F.col("bucket_n") - 1)),
                 F.lit(0)).alias("c")).collect()[0]["c"] // 2)
@@ -277,7 +274,8 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, catalog,
             _pt("exact_verify")
             catalog.write_table(
                 spark.createDataFrame(
-                    [("curate_minhash_prefilter", "candidates_in", n_cand),
+                    [("curate_minhash_prefilter", "band_collisions_in",
+                      n_cand),
                      ("curate_minhash_prefilter", "candidates_pruned",
                       n_cand - n_pref),
                      ("curate_minhash_prefilter", "min_matches", bar),
@@ -424,8 +422,7 @@ def filter_appended_neardups(spark: SparkSession, batch: DataFrame, catalog,
         near_base = vs_base.select(F.col("doc_a").alias("doc_id")).distinct()
 
         within_report: dict = {}
-        # r6: inline-prefiltered kernel shape (same pair set as the old
-        # distinct -> sig_prefilter composition — see
+        # one-sided walk of the same bucket kernel (see
         # minhash_lsh_prefiltered_pairs)
         within, _wsizes = dedup.minhash_lsh_prefiltered_pairs(
             new_sigs, min_matches=bar, max_bucket=max_bucket,

@@ -2,24 +2,36 @@
 
 Beyond the reference's own operator set (it deduplicates nothing — robust04 is
 pre-cleaned), a 100 TB web-corpus engine needs dedup as a first-class stage.
-All hot paths are JVM-side column expressions (whole-stage codegen; no Python
-per row). The hash family is md5-based so every operator has an exact ANSI-SQL
-twin for the DuckDB oracle gate:
+Hashing, shingling and signatures are JVM-side column expressions
+(whole-stage codegen; no Python per row). The hash family is md5-based so
+every operator has an exact ANSI-SQL twin for the DuckDB oracle gate:
 
     h_seed(x) = int64(first 15 hex digits of md5(seed || x))   # 60 bits
 
 Operators:
-* exact_dedup          — hash-groupBy on normalized text
-* char_shingles        — distinct char k-shingles per doc (explode, JVM-side)
-* minhash_signatures   — k minhashes per doc (k min-aggregates over shingles)
-* minhash_lsh_pairs    — banded LSH candidate pairs + exact Jaccard verify
-* ngram_jaccard_pairs  — exact shingle-Jaccard for candidate pairs
-* simhash              — 32-bit simhash fingerprint (tf-weighted bit votes)
-* simhash_neardup      — pairs within a Hamming radius (bucketed by bands)
+* exact_dedup                   — hash-groupBy on normalized text
+* char_shingles                 — distinct char k-shingles per doc
+* minhash_signatures            — k minhashes per doc (min-aggregates)
+* minhash_lsh_pairs             — banded LSH candidate pairs (a < b)
+* minhash_lsh_prefiltered_pairs — the same with the k-of-n signature
+                                  estimate bar applied inside the walk
+* minhash_neardup_vs_base       — new x base estimated near-dup pairs
+* ngram_jaccard_pairs           — exact shingle-Jaccard for candidate pairs
+* simhash                       — 32-bit simhash fingerprint (tf votes)
+* simhash_neardup               — pairs within a Hamming radius (bands)
+plus record_drop_report / simhash_neardup_with_metrics (bucket-cap drop
+volume into the catalog metrics table) and prefilter_min_matches /
+prefilter_true_pair_loss (the loss-calibrated estimate bar).
 
-Scale notes: shingle explode is map-side; the only shuffles are the per-doc
-min-aggregate (combines map-side) and the band-bucket self-join (bounded by
-bucket size; salted by band_id). Jaccard verify joins only candidate pairs.
+The three MinHash LSH operators share ONE path: _band_rows (md5 band
+keys), _cap_buckets (count-over-window bucket cap) and _pair_walk (one
+Arrow bucket-walk kernel, one-sided within a corpus or two-sided
+new x base).
+
+Scale notes: shingle explode is map-side; the shuffles are the per-doc
+min-aggregate (combines map-side) and the band-row repartition (O(n x
+bands) rows; collisions are counted inside the partitions and never
+exchanged). Jaccard verify joins only candidate pairs.
 """
 
 from __future__ import annotations
@@ -103,78 +115,44 @@ def minhash_signatures(shingles: DataFrame, n_hashes: int = MINHASH_N
     return shingles.groupBy("doc_id").agg(*aggs)
 
 
-import os as _os
-
-# Bucket-cap implementation A/B dial (same precedent as
-# $SPARK_GRAFT_TOKENIZER): "window" computes bucket sizes with ONE
-# count-over-window exchange whose hash partitioning the downstream
-# band-bucket self-join then reuses (ReusedExchange — the cap adds zero
-# net shuffles); "join" is the previous groupBy-sizes + left-semi shape
-# (two extra exchanges + a recompute of the bucket subtree), kept for
-# interleaved A/B measurement on this noise-prone VM.
-_CAP_IMPL = _os.environ.get("SPARK_GRAFT_CAP_IMPL", "window")
-
-# minhash_lsh_prefiltered_pairs implementation dial (same A/B precedent):
-# "kernel" generates+prunes within-bucket candidate pairs in a vectorized
-# numpy Arrow kernel (memory-bound integer compares); "join" is the pure
-# JVM self-join shape (kept for A/B and for non-numeric doc ids, where
-# the kernel falls back to it automatically).
-_PAIR_IMPL = _os.environ.get("SPARK_GRAFT_LSH_PAIR_IMPL", "kernel")
-
-
 def _cap_buckets(buckets: DataFrame, keys: list[str], max_bucket: int,
                  drop_report: dict | None = None,
                  cache_registry: list | None = None) -> DataFrame:
     """Drop band buckets larger than `max_bucket` members: a degenerate
-    bucket (boilerplate / empty docs) makes the self-join quadratic WITHIN
+    bucket (boilerplate / empty docs) makes the pair walk quadratic WITHIN
     the bucket at web scale. Oversized buckets are near-useless for near-dup
     anyway (everything matches everything); exact-dedup catches the
     byte-identical core. Off when max_bucket <= 0.
 
-    When `drop_report` is given, the dropped volume is COUNTED and surfaced:
-    silent truncation reads as full coverage when it is not. In the window
-    impl the report is derived from the SAME count-over-window column the
-    cap filters on (VERDICT r4 item 6: the old shape ran a separate
-    groupBy-sizes aggregate, recomputing the bucket subtree): the sized
-    frame is persisted, the report aggregate materializes it, and the
-    downstream self-join reads the cache — the bucket subtree and the
-    window exchange run ONCE total. The cache is released via
-    `cache_registry` when the caller provides one (the curate DAG does);
-    direct callers fall back to Spark's LRU eviction."""
+    Bucket sizes come from ONE count-over-window exchange whose hash
+    partitioning the downstream bucket walk reuses. When `drop_report` is
+    given, the dropped volume is COUNTED and surfaced (silent truncation
+    reads as full coverage when it is not), derived from the SAME window
+    column the cap filters on: the sized frame is persisted, the report
+    aggregate materializes it, and the downstream walk reads the cache —
+    the bucket subtree and the window exchange run ONCE total. The cache
+    is released via `cache_registry` when the caller provides one (the
+    curate DAG does); direct callers fall back to Spark's LRU eviction."""
     if max_bucket <= 0:
         if drop_report is not None:
             drop_report.update(dropped_buckets=0, dropped_rows=0,
                                max_bucket=0)
         return buckets
-    if _CAP_IMPL == "window":
-        from pyspark.sql import Window
-        w = Window.partitionBy(*keys)
-        sized = buckets.withColumn("_bn", F.count("*").over(w))
-        if drop_report is not None:
-            sized = sized.persist()
-            if cache_registry is not None:
-                cache_registry.append(sized)
-            over = (sized.filter(F.col("_bn") > max_bucket)
-                    .agg(F.count_distinct(*[F.col(k) for k in keys])
-                         .alias("b"),
-                         F.count("*").alias("r"))
-                    .collect()[0])
-            drop_report.update(dropped_buckets=int(over["b"]),
-                               dropped_rows=int(over["r"]),
-                               max_bucket=max_bucket)
-        return sized.filter(F.col("_bn") <= max_bucket).drop("_bn")
+    from pyspark.sql import Window
+    sized = buckets.withColumn("_bn", F.count("*").over(
+        Window.partitionBy(*keys)))
     if drop_report is not None:
-        over = (buckets.groupBy(*keys).count()
-                .filter(F.col("count") > max_bucket)
-                .agg(F.count("*").alias("b"),
-                     F.coalesce(F.sum("count"), F.lit(0)).alias("r"))
+        sized = sized.persist()
+        if cache_registry is not None:
+            cache_registry.append(sized)
+        over = (sized.filter(F.col("_bn") > max_bucket)
+                .agg(F.count_distinct(*[F.col(k) for k in keys]).alias("b"),
+                     F.count("*").alias("r"))
                 .collect()[0])
         drop_report.update(dropped_buckets=int(over["b"]),
                            dropped_rows=int(over["r"]),
                            max_bucket=max_bucket)
-    sizes = buckets.groupBy(*keys).count()
-    ok = sizes.filter(F.col("count") <= max_bucket).drop("count")
-    return buckets.join(ok, keys, "left_semi")
+    return sized.filter(F.col("_bn") <= max_bucket).drop("_bn")
 
 
 def record_drop_report(spark: SparkSession, catalog, report: dict,
@@ -194,18 +172,6 @@ def record_drop_report(spark: SparkSession, catalog, report: dict,
                         mode="append")
 
 
-def minhash_lsh_pairs_with_metrics(spark: SparkSession, catalog,
-                                   signatures: DataFrame,
-                                   phase: str = "dedup_minhash_lsh",
-                                   **kwargs) -> DataFrame:
-    """Pipeline-path wrapper: banded LSH candidates with the bucket-cap
-    drop volume recorded in the catalog's metrics table."""
-    report: dict = {}
-    pairs = minhash_lsh_pairs(signatures, drop_report=report, **kwargs)
-    record_drop_report(spark, catalog, report, phase)
-    return pairs
-
-
 def simhash_neardup_with_metrics(spark: SparkSession, catalog,
                                  fps: DataFrame,
                                  phase: str = "dedup_simhash",
@@ -218,16 +184,15 @@ def simhash_neardup_with_metrics(spark: SparkSession, catalog,
     return pairs
 
 
-def _band_buckets(signatures: DataFrame, n_hashes: int,
-                  bands: int) -> DataFrame:
-    """(doc_id, band_id, band_key) rows: one md5 band key per signature
-    band — the shared bucket-building step of banded LSH.
+def _band_rows(sigs: DataFrame, n_hashes: int, bands: int,
+               width: int) -> DataFrame:
+    """(doc_id, mh_0..mh_{width-1}, band_id, band_key) rows: one md5 band
+    key per band of the first `n_hashes` components, each row carrying
+    `width` signature components for the pair walk's match count.
 
-    r6: one EXPLODE over an inline (band_id, band_key) struct array
-    instead of a `bands`-way union — the union duplicated the whole
-    signature subtree (shingles + minhash aggregate) once PER BAND in the
-    physical plan (guide §2.4; 4 redundant corpus passes at the default
-    banding). Identical rows."""
+    One EXPLODE over an inline (band_id, band_key) struct array: a
+    `bands`-way union would duplicate the whole signature subtree
+    (shingles + minhash aggregate) once PER BAND in the physical plan."""
     rows_per_band = n_hashes // bands
     entries = []
     for b in range(bands):
@@ -236,10 +201,151 @@ def _band_buckets(signatures: DataFrame, n_hashes: int,
         entries.append(F.struct(
             F.lit(b).alias("band_id"),
             F.md5(F.concat_ws("|", *cols)).alias("band_key")))
-    return (signatures
-            .select("doc_id", F.explode(F.array(*entries)).alias("_b"))
-            .select("doc_id", F.col("_b.band_id").alias("band_id"),
+    mh = [f"mh_{j}" for j in range(width)]
+    return (sigs
+            .select("doc_id", *mh, F.explode(F.array(*entries)).alias("_b"))
+            .select("doc_id", *mh, F.col("_b.band_id").alias("band_id"),
                     F.col("_b.band_key").alias("band_key")))
+
+
+def _pair_id_type(*sigs: DataFrame):
+    """The doc_id type the pair walk carries: int, long or string; an
+    int/long mix across frames widens to long. Anything else is rejected
+    rather than silently routed through another algorithm."""
+    from pyspark.sql import types as T
+    kinds = [s.schema["doc_id"].dataType for s in sigs]
+    for t in kinds:
+        if not isinstance(t, (T.IntegerType, T.LongType, T.StringType)):
+            raise TypeError("MinHash LSH pairs need an int, long or string "
+                            f"doc_id, got {t.simpleString()}")
+    if all(t == kinds[0] for t in kinds):
+        return kinds[0]
+    if not any(isinstance(t, T.StringType) for t in kinds):
+        return T.LongType()
+    raise TypeError("new and base doc_id types differ: "
+                    + " vs ".join(t.simpleString() for t in kinds))
+
+
+def _pair_walk(rows: DataFrame, bar: int, width: int, id_type,
+               two_sided: bool) -> DataFrame:
+    """The bucket walk behind every MinHash LSH pair operator: band rows
+    are hash-partitioned by (band_id, band_key) and sorted, and an Arrow
+    batch kernel walks each bucket as an (n, width) int64 matrix.
+    Match counts come from ONE vectorized numpy comparison per row block,
+    so the O(collisions) volume is generated, counted and bar-filtered
+    inside the partition and never crosses an exchange; only pairs with
+    >= `bar` agreeing components leave. The repartition matches the cap
+    window's hash partitioning, so it adds no exchange when the cap ran.
+
+    One-sided (`two_sided=False`): every row of a bucket pairs with every
+    other; emits (doc_a, doc_b) with doc_a < doc_b — the within-corpus
+    self-join. Two-sided: rows carry ``side`` (0 = new, 1 = base) and only
+    new x base pairs with doc_a != doc_b are emitted, with their
+    ``est_matches``. String ids travel as UTF-8 bytes: byte order equals
+    code-point order equals Spark's UTF8String order, so ``a < b`` picks
+    the same pair orientation the JVM would. The kernel emits a pair once
+    per band it shares; the result is DISTINCT."""
+    from pyspark.sql import types as T
+    string_ids = isinstance(id_type, T.StringType)
+    id_expr = F.col("doc_id") if string_ids else F.col("doc_id").cast("long")
+    packed = rows.select(
+        "band_id", "band_key", *(["side"] if two_sided else []),
+        id_expr.alias("doc_id"),
+        F.array(*[f"mh_{j}" for j in range(width)]).alias("sig"))
+    n_shuffle = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    parted = (packed.repartition(n_shuffle, "band_id", "band_key")
+              .sortWithinPartitions("band_id", "band_key"))
+
+    def kernel(batches):
+        import pyarrow as pa
+        bucket: list = []     # (ids, sigs, sides) slices of the open bucket
+        out: list = []        # (doc_a, doc_b, est_matches) survivor arrays
+        cur = None
+
+        def drain():
+            a, b, m = (np.concatenate(x) for x in zip(*out))
+            out.clear()
+            if string_ids:
+                cols = [pa.array([x.decode("utf-8") for x in v], pa.string())
+                        for v in (a, b)]
+            else:
+                cols = [pa.array(a, pa.int64()), pa.array(b, pa.int64())]
+            names = ["doc_a", "doc_b"]
+            if two_sided:
+                cols.append(pa.array(m.astype(np.int32), pa.int32()))
+                names.append("est_matches")
+            return pa.RecordBatch.from_arrays(cols, names=names)
+
+        def flush():
+            if not bucket:
+                return
+            ids, sigs, sides = (np.concatenate(x) for x in zip(*bucket))
+            bucket.clear()
+            lhs = rhs = slice(None)
+            if two_sided:
+                lhs, rhs = sides == 0, sides == 1
+            a_ids, a_sigs = ids[lhs], sigs[lhs]
+            b_ids, b_sigs = ids[rhs], sigs[rhs]
+            if a_ids.size == 0 or b_ids.size == 0:
+                return
+            # block size bounds the (blk x n x width) bool compare
+            # intermediate (cap n=10k -> blk>=200 even at the
+            # degenerate-bucket ceiling)
+            blk = max(1, 2_000_000 // b_ids.size)
+            for i0 in range(0, a_ids.size, blk):
+                eq = (a_sigs[i0:i0 + blk, None, :]
+                      == b_sigs[None, :, :]).sum(axis=2)
+                ia, ib = np.nonzero(eq >= bar)
+                pa_ids, pb_ids = a_ids[i0 + ia], b_ids[ib]
+                keep = pa_ids != pb_ids if two_sided else pa_ids < pb_ids
+                if keep.any():
+                    out.append((pa_ids[keep], pb_ids[keep],
+                                eq[ia, ib][keep]))
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            col = batch.column
+            idx = batch.schema.get_field_index
+            bids = col(idx("band_id")).to_numpy(zero_copy_only=False)
+            bkeys = col(idx("band_key")).to_numpy(zero_copy_only=False)
+            if string_ids:
+                ids = np.array([s.encode("utf-8")
+                                for s in col(idx("doc_id")).to_pylist()],
+                               dtype=np.bytes_)
+            else:
+                ids = col(idx("doc_id")).to_numpy(
+                    zero_copy_only=False).astype(np.int64)
+            sigs = (col(idx("sig")).flatten().to_numpy(zero_copy_only=False)
+                    .astype(np.int64).reshape(-1, width))
+            sides = (col(idx("side")).to_numpy(zero_copy_only=False)
+                     if two_sided else np.zeros(n, np.int8))
+            # boundaries where (band_id, band_key) changes
+            change = np.flatnonzero(
+                (bids[1:] != bids[:-1]) | (bkeys[1:] != bkeys[:-1])) + 1
+            bounds = np.concatenate(([0], change, [n]))
+            for lo, hi in zip(bounds[:-1], bounds[1:]):
+                key = (bids[lo], bkeys[lo])
+                if key != cur:
+                    flush()
+                    cur = key
+                bucket.append((ids[lo:hi], sigs[lo:hi], sides[lo:hi]))
+            if out and sum(x[0].size for x in out) >= 1_000_000:
+                yield drain()
+        flush()
+        if out:
+            yield drain()
+
+    id_sql = "string" if string_ids else "long"
+    schema = f"doc_a {id_sql}, doc_b {id_sql}"
+    if two_sided:
+        schema += ", est_matches int"
+    pairs = parted.mapInArrow(kernel, schema=schema).distinct()
+    if isinstance(id_type, T.IntegerType):
+        pairs = pairs.withColumns({c: F.col(c).cast("int")
+                                   for c in ("doc_a", "doc_b")})
+    return pairs
 
 
 def minhash_lsh_pairs(signatures: DataFrame, n_hashes: int = MINHASH_N,
@@ -248,21 +354,15 @@ def minhash_lsh_pairs(signatures: DataFrame, n_hashes: int = MINHASH_N,
                       drop_report: dict | None = None,
                       cache_registry: list | None = None) -> DataFrame:
     """Banded LSH: docs sharing any band bucket -> candidate pairs (a < b).
+    The prefiltered path at bar 0 (every collision passes), pairs only.
     `max_bucket` caps bucket cardinality (see _cap_buckets; defaults to the
-    scale profile's DEFAULT_MAX_BUCKET so the within-bucket quadratic join
+    scale profile's DEFAULT_MAX_BUCKET so the within-bucket quadratic walk
     is bounded WITHOUT opt-in); pass `drop_report={}` to receive
     dropped_buckets/dropped_rows counts (and `cache_registry=[...]` to take
     ownership of the cap's shared sized-bucket cache — see _cap_buckets)."""
-    buckets = _band_buckets(signatures, n_hashes, bands)
-    buckets = _cap_buckets(buckets, ["band_id", "band_key"], max_bucket,
-                           drop_report, cache_registry)
-    left = buckets.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    right = buckets.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    return (
-        left.join(right, ["band_id", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-    )
+    return minhash_lsh_prefiltered_pairs(
+        signatures, 0, n_hashes=n_hashes, bands=bands, max_bucket=max_bucket,
+        drop_report=drop_report, cache_registry=cache_registry)[0]
 
 
 def minhash_lsh_prefiltered_pairs(signatures: DataFrame,
@@ -273,193 +373,33 @@ def minhash_lsh_prefiltered_pairs(signatures: DataFrame,
                                   drop_report: dict | None = None,
                                   cache_registry: list | None = None
                                   ) -> tuple[DataFrame, DataFrame]:
-    """Banded LSH candidates with the estimate prefilter applied INLINE in
-    the bucket self-join (r6, VERDICT r5 item 1 — the measured
-    scale-killer was the O(candidates) volume transiting exchanges:
-    139.5M collision pairs for 50k sf1.0 docs, 585.7M at the 530k run).
+    """Banded LSH candidates over the first `n_hashes` components with the
+    estimate prefilter applied INLINE in the bucket walk (VERDICT r5
+    item 1 — the measured scale-killer was the O(candidates) volume
+    transiting exchanges: 139.5M collision pairs for 50k sf1.0 docs,
+    585.7M at the 530k run).
 
-    The band rows CARRY the full `_sig_width(signatures)`-wide signature
-    (a few hundred bytes per row, O(n x bands) rows), so the collision
-    volume is generated, match-counted and pruned inside the join
-    partitions: the old shape exchanged the collision pairs THREE times
-    (distinct, then two signature joins); this shape exchanges them ZERO
-    times — only the O(n) band rows and the O(true-near-dup) survivors
-    move. Returns ``(pairs, bucket_sizes)``:
+    The band rows carry the full `_sig_width(signatures)`-wide signature
+    (O(n x bands) rows), so the collision volume is generated,
+    match-counted and pruned inside the bucket partitions (_pair_walk);
+    only the band rows and the survivors move. Returns
+    ``(pairs, bucket_sizes)``:
 
-    * ``pairs`` — DISTINCT (doc_a, doc_b), exactly the set the
-      distinct-then-``sig_prefilter_pairs`` composition yields (same
-      mh components, same integer bar, so provably the same pairs);
-    * ``bucket_sizes`` — (band_id, band_key/band size) of CAP-SURVIVING
+    * ``pairs`` — DISTINCT (doc_a, doc_b), doc_a < doc_b, of band-colliding
+      docs whose signatures agree on >= `min_matches` components;
+    * ``bucket_sizes`` — (band_id, band_key, bucket_n) of CAP-SURVIVING
       buckets, from which callers derive the collision volume as
       sum(n*(n-1)/2) without ever materializing it.
     """
-    from pyspark.sql import types as T
+    id_type = _pair_id_type(signatures)
     width = _sig_width(signatures)
-    rows_per_band = n_hashes // bands
-    entries = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * rows_per_band + r}").cast("string")
-                for r in range(rows_per_band)]
-        entries.append(F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(F.concat_ws("|", *cols)).alias("band_key")))
-    buckets = (signatures
-               .select("doc_id", *[f"mh_{j}" for j in range(width)],
-                       F.explode(F.array(*entries)).alias("_b"))
-               .select("doc_id", *[f"mh_{j}" for j in range(width)],
-                       F.col("_b.band_id").alias("band_id"),
-                       F.col("_b.band_key").alias("band_key")))
-    buckets = _cap_buckets(buckets, ["band_id", "band_key"], max_bucket,
+    buckets = _cap_buckets(_band_rows(signatures, n_hashes, bands, width),
+                           ["band_id", "band_key"], max_bucket,
                            drop_report, cache_registry)
     sizes = (buckets.groupBy("band_id", "band_key")
              .agg(F.count("*").alias("bucket_n")))
-
-    id_type = signatures.schema["doc_id"].dataType
-    kernel_ids = isinstance(id_type,
-                            (T.LongType, T.IntegerType, T.StringType))
-    string_ids = isinstance(id_type, T.StringType)
-    if _PAIR_IMPL == "kernel" and kernel_ids:
-        # Arrow group-walk over buckets: per bucket a (n, width) int64
-        # matrix; pairwise match counts come from ONE vectorized numpy
-        # comparison per row block instead of per-candidate UnsafeRow
-        # production in the SMJ (the measured per-pair cost: the join
-        # materialized a 2x(width+2)-column row per collision — ~75 s for
-        # 139.5M collisions at sf1.0; the kernel does the same integer
-        # comparisons memory-bound, ~5x faster). Output is exactly the
-        # (a < b, matches >= bar) pair set; distinct() dedups the <=bands
-        # copies. The repartition matches the cap window's hash
-        # partitioning, so no extra exchange when the cap ran.
-        bar = int(min_matches)
-        id_expr = (F.col("doc_id") if string_ids
-                   else F.col("doc_id").cast("long"))
-        packed = buckets.select(
-            "band_id", "band_key", id_expr.alias("doc_id"),
-            F.array(*[f"mh_{j}" for j in range(width)]).alias("sig"))
-        n_shuffle = int(signatures.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-        parted = (packed.repartition(n_shuffle, "band_id", "band_key")
-                  .sortWithinPartitions("band_id", "band_key"))
-
-        def pair_kernel(batches):
-            import pyarrow as pa
-            ids_buf: list = []
-            sig_buf: list = []
-            cur = None
-            out_a: list = []
-            out_b: list = []
-
-            def drain():
-                a = np.concatenate(out_a)
-                b = np.concatenate(out_b)
-                if string_ids:
-                    # fixed-width bytes back to str (survivors only —
-                    # tiny after the bar filter)
-                    batch = pa.RecordBatch.from_arrays([
-                        pa.array([x.decode() for x in a],
-                                 type=pa.string()),
-                        pa.array([x.decode() for x in b],
-                                 type=pa.string()),
-                    ], names=["doc_a", "doc_b"])
-                else:
-                    batch = pa.RecordBatch.from_arrays([
-                        pa.array(a, type=pa.int64()),
-                        pa.array(b, type=pa.int64()),
-                    ], names=["doc_a", "doc_b"])
-                out_a.clear(), out_b.clear()
-                return batch
-
-            def flush_bucket():
-                if not ids_buf:
-                    return
-                ids = np.concatenate(ids_buf)
-                sigs = np.vstack(sig_buf)
-                ids_buf.clear(), sig_buf.clear()
-                n = ids.size
-                if n < 2:
-                    return
-                # block size bounds the (blk x n x width) bool compare
-                # intermediate to ~64 MB (cap n=10k -> blk>=200 even at
-                # the degenerate-bucket ceiling)
-                blk = max(1, min(n, 2_000_000 // max(n, 1)))
-                for i0 in range(0, n, blk):
-                    eq = (sigs[i0:i0 + blk, None, :]
-                          == sigs[None, :, :]).sum(axis=2)
-                    ia, ib = np.nonzero(eq >= bar)
-                    a_ids = ids[i0 + ia]
-                    b_ids = ids[ib]
-                    keep = a_ids < b_ids
-                    if keep.any():
-                        out_a.append(a_ids[keep])
-                        out_b.append(b_ids[keep])
-
-            for batch in batches:
-                idx = batch.schema.get_field_index
-                bids = batch.column(idx("band_id")).to_numpy(
-                    zero_copy_only=False)
-                bkeys = batch.column(idx("band_key")).to_numpy(
-                    zero_copy_only=False)
-                if string_ids:
-                    # fixed-width bytes: elementwise a < b matches
-                    # Spark's unsigned byte-wise UTF8 order for the
-                    # ASCII ids this path carries (trailing NUL pads
-                    # sort before any byte, preserving prefix order)
-                    docs_a = np.asarray(
-                        batch.column(idx("doc_id")).to_pylist(),
-                        dtype=np.bytes_)
-                else:
-                    docs_a = batch.column(idx("doc_id")).to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                sig_col = batch.column(idx("sig"))
-                flat = sig_col.flatten().to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                sigs = flat.reshape(-1, width)
-                n = len(docs_a)
-                if n == 0:
-                    continue
-                # boundaries where (band_id, band_key) changes
-                change = np.flatnonzero(
-                    (bids[1:] != bids[:-1]) | (bkeys[1:] != bkeys[:-1])) + 1
-                bounds = np.concatenate(([0], change, [n]))
-                for gi in range(len(bounds) - 1):
-                    lo, hi = int(bounds[gi]), int(bounds[gi + 1])
-                    key = (bids[lo], bkeys[lo])
-                    if cur is not None and cur != key:
-                        flush_bucket()
-                    cur = key
-                    ids_buf.append(docs_a[lo:hi])
-                    sig_buf.append(sigs[lo:hi])
-                if out_a and sum(x.size for x in out_a) >= 1_000_000:
-                    yield drain()
-            flush_bucket()
-            if out_a:
-                yield drain()
-
-        out_schema = ("doc_a string, doc_b string" if string_ids
-                      else "doc_a long, doc_b long")
-        raw = parted.mapInArrow(pair_kernel, schema=out_schema)
-        pairs = raw.distinct()
-        if isinstance(id_type, T.IntegerType):
-            pairs = pairs.select(F.col("doc_a").cast("int").alias("doc_a"),
-                                 F.col("doc_b").cast("int").alias("doc_b"))
-        return pairs, sizes
-
-    left = buckets.select(F.col("doc_id").alias("doc_a"),
-                          *[F.col(f"mh_{j}").alias(f"_a{j}")
-                            for j in range(width)],
-                          "band_id", "band_key")
-    right = buckets.select(F.col("doc_id").alias("doc_b"),
-                           *[F.col(f"mh_{j}").alias(f"_b{j}")
-                             for j in range(width)],
-                           "band_id", "band_key")
-    matches = None
-    for j in range(width):
-        m = (F.col(f"_a{j}") == F.col(f"_b{j}")).cast("int")
-        matches = m if matches is None else matches + m
-    pairs = (left.join(right, ["band_id", "band_key"])
-             .filter(F.col("doc_a") < F.col("doc_b"))
-             .filter(matches >= F.lit(min_matches))
-             .select("doc_a", "doc_b").distinct())
-    return pairs, sizes
+    return _pair_walk(buckets, int(min_matches), width, id_type,
+                      two_sided=False), sizes
 
 
 def minhash_neardup_vs_base(new_sigs: DataFrame, base_sigs: DataFrame,
@@ -472,10 +412,11 @@ def minhash_neardup_vs_base(new_sigs: DataFrame, base_sigs: DataFrame,
                             drop_report: dict | None = None,
                             cache_registry: list | None = None) -> DataFrame:
     """Estimated near-dup pairs BETWEEN two signature frames (doc_a from
-    `new_sigs`, doc_b from `base_sigs`) — the incremental-curation shape:
-    an appended micro-batch's signatures are O(batch) to compute and LSH-
-    join against the persisted base-corpus signature table, so the work
-    per append is O(batch x collision volume), never a base-corpus scan.
+    `new_sigs`, doc_b from `base_sigs`, doc_a != doc_b) — the
+    incremental-curation shape: an appended micro-batch's signatures are
+    O(batch) to compute and meet the persisted base-corpus signature table
+    in the two-sided bucket walk, so the work per append is O(batch x
+    collision volume), never a base-corpus scan.
 
     Candidates come from banded LSH over the first `n_hashes` components
     (both frames share the mh{j}: seed family, so band keys are
@@ -483,187 +424,23 @@ def minhash_neardup_vs_base(new_sigs: DataFrame, base_sigs: DataFrame,
     `min_matches` agreeing components over the full signature width
     (default the loss-calibrated prefilter_min_matches(threshold, width,
     max_loss) — a true threshold-Jaccard pair is missed with probability
-    <= max_loss). This is estimate-only by design: the base corpus's
-    shingles are not retained at scale, so exact Jaccard re-verification
-    belongs to the next full curate_corpus run. `max_bucket` caps the
-    BASE side's degenerate buckets (the batch side is small)."""
-    from pyspark.sql import types as T
+    <= max_loss), reported as ``est_matches``. This is estimate-only by
+    design: the base corpus's shingles are not retained at scale, so exact
+    Jaccard re-verification belongs to the next full curate_corpus run.
+    `max_bucket` caps the BASE side's degenerate buckets (the batch side
+    is small)."""
+    id_type = _pair_id_type(new_sigs, base_sigs)
     width = min(_sig_width(new_sigs), _sig_width(base_sigs))
     if min_matches is None:
         min_matches = prefilter_min_matches(threshold, width, max_loss)
-
-    def band_rows_wide(sigs):
-        rows_per_band = n_hashes // bands
-        entries = []
-        for bd in range(bands):
-            cols = [F.col(f"mh_{bd * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)]
-            entries.append(F.struct(
-                F.lit(bd).alias("band_id"),
-                F.md5(F.concat_ws("|", *cols)).alias("band_key")))
-        return (sigs
-                .select("doc_id", *[f"mh_{j}" for j in range(width)],
-                        F.explode(F.array(*entries)).alias("_b"))
-                .select("doc_id", *[f"mh_{j}" for j in range(width)],
-                        F.col("_b.band_id").alias("band_id"),
-                        F.col("_b.band_key").alias("band_key")))
-
-    id_type = new_sigs.schema["doc_id"].dataType
-    same_ids = id_type == base_sigs.schema["doc_id"].dataType
-    string_ids = isinstance(id_type, T.StringType)
-    kernel_ok = same_ids and isinstance(
-        id_type, (T.LongType, T.IntegerType, T.StringType))
-    if _PAIR_IMPL == "kernel" and kernel_ok:
-        # r6: two-sided variant of the minhash_lsh_prefiltered_pairs
-        # kernel — band rows carry the signature AND a side tag, so the
-        # new x base collision volume is generated, match-counted and
-        # bar-filtered inside the bucket partitions; the O(collisions)
-        # distinct + two signature joins of the old shape never move
-        # any exchange. Same (doc_a, doc_b, est_matches) set.
-        bar = int(min_matches)
-        id_expr = (F.col("doc_id") if string_ids
-                   else F.col("doc_id").cast("long"))
-        nw = band_rows_wide(new_sigs).withColumn("side", F.lit(0))
-        bw = _cap_buckets(band_rows_wide(base_sigs),
-                          ["band_id", "band_key"], max_bucket, drop_report,
-                          cache_registry).withColumn("side", F.lit(1))
-        packed = nw.unionByName(bw).select(
-            "band_id", "band_key", "side", id_expr.alias("doc_id"),
-            F.array(*[f"mh_{j}" for j in range(width)]).alias("sig"))
-        n_shuffle = int(new_sigs.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-        parted = (packed.repartition(n_shuffle, "band_id", "band_key")
-                  .sortWithinPartitions("band_id", "band_key"))
-
-        def pair_kernel(batches):
-            import pyarrow as pa
-            ids_buf: list = []
-            sig_buf: list = []
-            side_buf: list = []
-            cur = None
-            out_a: list = []
-            out_b: list = []
-            out_m: list = []
-
-            def drain():
-                a = np.concatenate(out_a)
-                b = np.concatenate(out_b)
-                m = np.concatenate(out_m)
-                if string_ids:
-                    cols = [pa.array([x.decode() for x in a],
-                                     type=pa.string()),
-                            pa.array([x.decode() for x in b],
-                                     type=pa.string())]
-                else:
-                    cols = [pa.array(a, type=pa.int64()),
-                            pa.array(b, type=pa.int64())]
-                cols.append(pa.array(m.astype(np.int32), type=pa.int32()))
-                batch = pa.RecordBatch.from_arrays(
-                    cols, names=["doc_a", "doc_b", "est_matches"])
-                out_a.clear(), out_b.clear(), out_m.clear()
-                return batch
-
-            def flush_bucket():
-                if not ids_buf:
-                    return
-                ids = np.concatenate(ids_buf)
-                sigs = np.vstack(sig_buf)
-                sides = np.concatenate(side_buf)
-                ids_buf.clear(), sig_buf.clear(), side_buf.clear()
-                new_m = sides == 0
-                base_m = ~new_m
-                if not new_m.any() or not base_m.any():
-                    return
-                a_ids, a_sigs = ids[new_m], sigs[new_m]
-                b_ids, b_sigs = ids[base_m], sigs[base_m]
-                nb_rows = b_ids.size
-                blk = max(1, 2_000_000 // max(nb_rows, 1))
-                for i0 in range(0, a_ids.size, blk):
-                    eq = (a_sigs[i0:i0 + blk, None, :]
-                          == b_sigs[None, :, :]).sum(axis=2)
-                    ia, ib = np.nonzero(eq >= bar)
-                    pa_ids = a_ids[i0 + ia]
-                    pb_ids = b_ids[ib]
-                    keep = pa_ids != pb_ids
-                    if keep.any():
-                        out_a.append(pa_ids[keep])
-                        out_b.append(pb_ids[keep])
-                        out_m.append(eq[ia, ib][keep])
-
-            for batch in batches:
-                idx = batch.schema.get_field_index
-                bids = batch.column(idx("band_id")).to_numpy(
-                    zero_copy_only=False)
-                bkeys = batch.column(idx("band_key")).to_numpy(
-                    zero_copy_only=False)
-                sides_a = batch.column(idx("side")).to_numpy(
-                    zero_copy_only=False)
-                if string_ids:
-                    docs_a = np.asarray(
-                        batch.column(idx("doc_id")).to_pylist(),
-                        dtype=np.bytes_)
-                else:
-                    docs_a = batch.column(idx("doc_id")).to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                flat = batch.column(idx("sig")).flatten().to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                sigs = flat.reshape(-1, width)
-                n = len(docs_a)
-                if n == 0:
-                    continue
-                change = np.flatnonzero(
-                    (bids[1:] != bids[:-1]) | (bkeys[1:] != bkeys[:-1])) + 1
-                bounds = np.concatenate(([0], change, [n]))
-                for gi in range(len(bounds) - 1):
-                    lo, hi = int(bounds[gi]), int(bounds[gi + 1])
-                    key = (bids[lo], bkeys[lo])
-                    if cur is not None and cur != key:
-                        flush_bucket()
-                    cur = key
-                    ids_buf.append(docs_a[lo:hi])
-                    sig_buf.append(sigs[lo:hi])
-                    side_buf.append(sides_a[lo:hi])
-                if out_a and sum(x.size for x in out_a) >= 1_000_000:
-                    yield drain()
-            flush_bucket()
-            if out_a:
-                yield drain()
-
-        id_sql = "string" if string_ids else "long"
-        raw = parted.mapInArrow(
-            pair_kernel,
-            schema=f"doc_a {id_sql}, doc_b {id_sql}, est_matches int")
-        pairs = raw.distinct()
-        if isinstance(id_type, T.IntegerType):
-            pairs = pairs.select(
-                F.col("doc_a").cast("int").alias("doc_a"),
-                F.col("doc_b").cast("int").alias("doc_b"),
-                "est_matches")
-        return pairs
-
-    nb = (_band_buckets(new_sigs, n_hashes, bands)
-          .withColumnRenamed("doc_id", "doc_a"))
-    bb = _cap_buckets(_band_buckets(base_sigs, n_hashes, bands),
-                      ["band_id", "band_key"], max_bucket, drop_report,
-                      cache_registry)
-    bb = bb.withColumnRenamed("doc_id", "doc_b")
-    pairs = (nb.join(bb, ["band_id", "band_key"])
-             .filter(F.col("doc_a") != F.col("doc_b"))
-             .select("doc_a", "doc_b").distinct())
-    a = new_sigs.select(F.col("doc_id").alias("doc_a"),
-                        *[F.col(f"mh_{j}").alias(f"_a{j}")
-                          for j in range(width)])
-    b = base_sigs.select(F.col("doc_id").alias("doc_b"),
-                         *[F.col(f"mh_{j}").alias(f"_b{j}")
-                           for j in range(width)])
-    matches = None
-    for j in range(width):
-        m = (F.col(f"_a{j}") == F.col(f"_b{j}")).cast("int")
-        matches = m if matches is None else matches + m
-    return (pairs.join(a, "doc_a").join(b, "doc_b")
-            .withColumn("est_matches", matches)
-            .filter(F.col("est_matches") >= min_matches)
-            .select("doc_a", "doc_b", "est_matches"))
+    new_rows = _band_rows(new_sigs, n_hashes, bands, width)
+    base_rows = _cap_buckets(_band_rows(base_sigs, n_hashes, bands, width),
+                             ["band_id", "band_key"], max_bucket,
+                             drop_report, cache_registry)
+    rows = (new_rows.withColumn("side", F.lit(0))
+            .unionByName(base_rows.withColumn("side", F.lit(1))))
+    return _pair_walk(rows, int(min_matches), width, id_type,
+                      two_sided=True)
 
 
 # Estimate-signature width for the verify prefilter. Wider than the
@@ -725,61 +502,12 @@ def _sig_width(sigs: DataFrame) -> int:
     return n
 
 
-def sig_prefilter_pairs(pairs: DataFrame, sigs: DataFrame,
-                        min_matches: int,
-                        n_hashes: int | None = None) -> DataFrame:
-    """Keep only candidate pairs whose signatures agree on >= min_matches
-    components (width inferred from the sigs frame unless given). Two
-    hash joins on doc_id against the sigs table + n integer comparisons
-    per pair — O(candidates) work, vs the exact verify's
-    O(candidates x shingles_per_doc) shingle join. The standard MinHash
-    estimate-then-verify step: the verify stage stays proportional to the
-    plausible-near-dup volume, not LSH's false-candidate volume.
-    min_matches <= 0 is a no-op (every pair passes, loss 0).
-
-    Pairs referencing a doc_id ABSENT from `sigs` pass through unpruned
-    (left joins; ADVICE r4: in-repo callers derive pairs from the same
-    sigs frame, but the public ngram_jaccard_pairs(sigs=...) API accepts
-    externally-built pairs, and an estimate prefilter must never turn a
-    missing estimate into a silent drop — the exact verify decides)."""
-    if min_matches <= 0:
-        return pairs
-    if n_hashes is None:
-        n_hashes = _sig_width(sigs)
-    a = sigs.select(F.col("doc_id").alias("doc_a"),
-                    *[F.col(f"mh_{j}").alias(f"_a{j}")
-                      for j in range(n_hashes)])
-    b = sigs.select(F.col("doc_id").alias("doc_b"),
-                    *[F.col(f"mh_{j}").alias(f"_b{j}")
-                      for j in range(n_hashes)])
-    matches = None
-    for j in range(n_hashes):
-        m = (F.col(f"_a{j}") == F.col(f"_b{j}")).cast("int")
-        matches = m if matches is None else matches + m
-    missing_sig = F.col("_a0").isNull() | F.col("_b0").isNull()
-    return (pairs.join(a, "doc_a", "left").join(b, "doc_b", "left")
-            .filter(F.when(missing_sig, F.lit(True))
-                    .otherwise(matches >= min_matches))
-            .select("doc_a", "doc_b"))
-
-
 def ngram_jaccard_pairs(shingles: DataFrame, pairs: DataFrame,
-                        threshold: float = 0.0,
-                        sigs: DataFrame | None = None,
-                        min_matches: int | None = None) -> DataFrame:
+                        threshold: float = 0.0) -> DataFrame:
     """Exact shingle-Jaccard for candidate pairs:
-    |A n B| / (|A| + |B| - |A n B|). Joins touch candidates only.
-
-    With ``sigs`` (a minhash_signatures frame of any width — pass a
-    PREFILTER_N-wide one for sharp pruning), candidates are first pruned
-    by the estimated Jaccard (>= ``min_matches`` agreeing components,
-    default the loss-calibrated prefilter_min_matches(threshold, width);
-    a bar of 0 — the calibrated answer when no bar meets the loss bound,
-    e.g. low thresholds on narrow signatures — prunes nothing)."""
-    if sigs is not None:
-        if min_matches is None:
-            min_matches = prefilter_min_matches(threshold, _sig_width(sigs))
-        pairs = sig_prefilter_pairs(pairs, sigs, min_matches)
+    |A n B| / (|A| + |B| - |A n B|). Joins touch candidates only; feed it
+    minhash_lsh_prefiltered_pairs output so the shingle join sees the
+    estimate-plausible volume, not LSH's false-candidate volume."""
     sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
     sb = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
