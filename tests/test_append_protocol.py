@@ -730,6 +730,29 @@ def test_manifest_pruning_drops_curated_epoch_markers(spark, tmp_path):
     assert len(snaps) == base_entries + 20 * 4 + 1
 
 
+def test_manifest_pruning_keeps_other_tables_metrics_lookalikes(tmp_path):
+    """Only the `metrics` table's '{phase}-metrics:{tag}' markers retire
+    with their epoch; another table's snapshot whose fingerprint merely
+    contains '-metrics:<old tag>' survives pruning."""
+    cat = Catalog(str(tmp_path / "mcat"))
+    for tag in ("old", "new"):
+        cat._append_snapshot({"table": "_epochs",
+                              "fingerprint": f"{tag}:commit",
+                              "epoch_tag": tag, "tables": []})
+        cat._append_snapshot({"table": "metrics",
+                              "fingerprint": f"curate_append-metrics:{tag}"})
+        cat._append_snapshot({"table": "_epochs",
+                              "fingerprint": f"{tag}:done"})
+    cat._append_snapshot({"table": "postings",
+                          "fingerprint": "build-metrics:old"})
+    assert cat.prune_manifest(keep_epochs=1) == 3
+    fps = {(s["table"], s["fingerprint"])
+           for s in cat._load_manifest()["snapshots"]}
+    assert ("postings", "build-metrics:old") in fps
+    assert ("metrics", "curate_append-metrics:old") not in fps
+    assert ("metrics", "curate_append-metrics:new") in fps
+
+
 def test_streaming_dedup_winner_deterministic(spark, tmp_path):
     """ADVICE r2: among same-batch duplicates the surviving row is the
     minimum (warc_ts, url) — not an arbitrary arrival-order artifact."""

@@ -5,11 +5,12 @@ north_rule) — top-k docids AND BM25 scores, tie-break (score DESC, docid ASC).
 from __future__ import annotations
 
 import math
+import warnings
 
 import pytest
 
 from text_retrieval_and_search_engines_spark.plans.query import (
-    SearchParams, search, search_rm3)
+    SearchParams, rm3_expand, search, search_rm3)
 from text_retrieval_and_search_engines_spark.sources.pages import synth_queries
 
 QUERIES = None  # filled lazily from fixture vocab
@@ -81,6 +82,17 @@ def test_rm3_rank_identical(spark, tiny_index):
     expected = {row.qid: oracle.search_rm3(row.text, k=20)
                 for row in qpdf.itertuples()}
     _assert_rank_identical(got, expected, 20)
+
+
+def test_rm3_kernel_hints_give_the_eval_type(spark, tiny_index):
+    """The grouped-map kernel's type hints name its eval type, so
+    applyInPandas does not warn that it cannot infer one."""
+    reader, _oracle, catalog, _en = tiny_index
+    _qpdf, qdf = _queries_df(spark, n=2)
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        rm3_expand(reader, qdf, catalog.read_table(spark, "docs"))
+    assert not [w for w in seen if "infer the eval type" in str(w.message)]
 
 
 def test_docid_assignment_is_url_rank(spark, tiny_index):

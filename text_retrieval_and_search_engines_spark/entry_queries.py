@@ -10,9 +10,13 @@ ASC) tie-breaks so float summation-order differences can never flip a row.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.ranking import rank_desc
+from .functions.text import simple_words, simple_words_sql, tokenize
 from .operators import aggregation as agg_ops
 from .operators import (decontam, dedup, evaluation, fusion, pii,
                         similarity, textstats)
@@ -142,8 +146,6 @@ def _run2(spark, sf_dir):
 RUN2_SQL = ("SELECT event_type AS qid, user_id AS docid, max(value) AS score "
             "FROM events GROUP BY 1, 2")
 
-WORDS_SQL = ("list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), "
-             "w -> w != '')")
 NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 
 
@@ -180,9 +182,7 @@ def q_collection_stats(spark, sf_dir):
     n_docs = docs.count()
     # r6: token total from sum(size(tokens)) — same value as counting
     # exploded rows, no explode pass (guide §2.3 narrow aggregation)
-    words = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                     lambda w: w != "")
-    return (docs.select(F.size(words).alias("_n"))
+    return (docs.select(F.size(simple_words("text")).alias("_n"))
             .agg(F.sum("_n").alias("total_tokens"))
             .select(F.lit(n_docs).cast("long").alias("n_docs"),
                     "total_tokens",
@@ -305,7 +305,7 @@ def _simhash_sql(bits: int = 32, limit: int = DEDUP_LIMIT) -> str:
         f"(CASE WHEN v_{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(bits))
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest({WORDS_SQL}) AS term
+  SELECT doc_id, unnest({simple_words_sql()}) AS term
   FROM documents WHERE doc_id < {limit}),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
 hashed AS (SELECT doc_id, tf, {dedup.h64_sql('term', 'sh:')} AS h FROM tf),
@@ -365,9 +365,7 @@ def q_ann_cosine_topk(spark, sf_dir):
                       F.round(similarity._dot(F.col("cv"), F.col("qv"))
                               / (F.col("cn") * F.col("qn")), 6)
                       .alias("cosine")))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5))
+    return rank_desc(scored, "cosine", "nbr_id", k=5)
 
 
 ANN_TOPK_SQL = """
@@ -438,7 +436,7 @@ def _lang_id_sql() -> str:
     best = "greatest(" + ", ".join(f"hits_{x}" for x in langs) + ")"
     cols = ", ".join(f"hits_{x}" for x in langs)
     return f"""
-WITH w AS (SELECT doc_id, {WORDS_SQL} AS words FROM documents),
+WITH w AS (SELECT doc_id, {simple_words_sql()} AS words FROM documents),
 h AS (SELECT doc_id, {", ".join(hits)} FROM w),
 b AS (SELECT *, {best} AS best FROM h)
 SELECT doc_id, {cols}, {guess} AS lang_guess FROM b
@@ -456,7 +454,7 @@ STOP10_SQL = "[" + ", ".join(f"'{w}'" for w in STOP10) + "]"
 
 QUALITY_SQL = f"""
 WITH base AS (
-  SELECT doc_id, text, length(text) AS n_chars, {WORDS_SQL} AS words
+  SELECT doc_id, text, length(text) AS n_chars, {simple_words_sql()} AS words
   FROM documents),
 feat AS (
   SELECT doc_id, n_chars, len(words)::INT AS n_words,
@@ -496,7 +494,7 @@ TOKEN_COUNT_SQL = f"""
 WITH base AS (
   SELECT doc_id,
          list_filter(string_split_regex(text, '\\s+'), w -> w != '') AS ws,
-         {WORDS_SQL} AS words
+         {simple_words_sql()} AS words
   FROM documents)
 SELECT doc_id, len(ws)::BIGINT AS ws_tokens, len(words)::BIGINT AS word_tokens,
        coalesce(list_aggregate(
@@ -639,8 +637,7 @@ FROM normed JOIN w USING (run_id) GROUP BY 1, 2
 # window ops ------------------------------------------------------------------
 
 def q_rank_topk(spark, sf_dir):
-    r = agg_ops.rank_by_score(_run2(spark, sf_dir))
-    return r.filter(F.col("rank") <= 5).select("qid", "docid", "score", "rank")
+    return rank_desc(_run2(spark, sf_dir), "score", "docid", k=5)
 
 
 RANK_TOPK_SQL = f"""
@@ -774,11 +771,9 @@ def q_ann_multiprobe(spark, sf_dir):
     # re-rank below does the real top-5
     cands = lsh_cosine_topk(emb, q, k=1_000_000, n_planes=ANN_MP_PLANES,
                             seed=ANN_MP_SEED, n_probes=1, dim=ANN_MP_DIM)
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (cands.select("qid", "nbr_id",
-                         F.round("cosine", 6).alias("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5))
+    return rank_desc(cands.select("qid", "nbr_id",
+                                  F.round("cosine", 6).alias("cosine")),
+                     "cosine", "nbr_id", k=5)
 
 
 def _ann_multiprobe_sql(n_planes: int = ANN_MP_PLANES,
@@ -836,11 +831,9 @@ def q_ann_margin(spark, sf_dir):
                                    n_planes=ANN_MP_PLANES, seed=ANN_MP_SEED,
                                    probe_budget=ANN_MG_BUDGET,
                                    dim=ANN_MP_DIM)
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (cands.select("qid", "nbr_id",
-                         F.round("cosine", 6).alias("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5))
+    return rank_desc(cands.select("qid", "nbr_id",
+                                  F.round("cosine", 6).alias("cosine")),
+                     "cosine", "nbr_id", k=5)
 
 
 def _ann_margin_sql(n_planes: int = ANN_MP_PLANES, seed: int = ANN_MP_SEED,
@@ -966,11 +959,9 @@ def _engine_topk(spark, sf_dir, algo: str):
     qdf = spark.createDataFrame(BM25_QUERIES, "qid string, text string")
     res = search(reader, qdf, SearchParams(k=50, algo=algo))
     # re-rank over 6dp-rounded scores so the tie-break matches the SQL twin
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (res.select("qid", F.col("docid").alias("doc_id"),
-                       F.round("score", 6).alias("score"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 10))
+    return rank_desc(res.select("qid", F.col("docid").alias("doc_id"),
+                                F.round("score", 6).alias("score")),
+                     "score", "doc_id", k=10)
 
 
 def q_engine_bm25(spark, sf_dir):
@@ -1002,11 +993,9 @@ def q_rm3_topk(spark, sf_dir):
                      fb_terms=RM3_FB_TERMS,
                      original_query_weight=RM3_LAMBDA,
                      params=SearchParams(k=50))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (res.select("qid", F.col("docid").alias("doc_id"),
-                       F.round("score", 6).alias("score"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 10))
+    return rank_desc(res.select("qid", F.col("docid").alias("doc_id"),
+                                F.round("score", 6).alias("score")),
+                     "score", "doc_id", k=10)
 
 
 def _rm3_topk_sql(queries, fb_docs: int = RM3_FB_DOCS,
@@ -1017,14 +1006,10 @@ def _rm3_topk_sql(queries, fb_docs: int = RM3_FB_DOCS,
     Lucene>=8 BM25 formula; final scores rounded to 6dp before ranking
     (first-pass fb selection and fb-term selection rank unrounded — both
     sides agree to ~1e-15, and exact ties break on doc_id/term on both)."""
-    import re as _re
     qrows, pqrows = [], []
     for qid, text in queries:
-        terms = [t for t in _re.split(r"[^a-z0-9]+", text.lower()) if t]
-        seen: dict[str, int] = {}
-        for t in terms:
-            seen[t] = seen.get(t, 0) + 1
-        qlen = len(terms)
+        seen = Counter(tokenize(text, stem=False, stop=False))
+        qlen = seen.total()
         for t, wgt in seen.items():
             qrows.append(f"('{qid}', '{t}', {float(wgt)!r})")
             pqrows.append(f"('{qid}', '{t}', {wgt / qlen!r})")
@@ -1159,7 +1144,7 @@ def q_repetition(spark, sf_dir):
 
 
 REPETITION_SQL = f"""
-WITH d AS (SELECT doc_id, {WORDS_SQL} AS ws FROM documents),
+WITH d AS (SELECT doc_id, {simple_words_sql()} AS ws FROM documents),
 uni AS (SELECT doc_id, unnest(ws) AS w FROM d),
 uc AS (SELECT doc_id, w, count(*)::BIGINT AS c FROM uni GROUP BY 1, 2),
 us AS (SELECT doc_id, sum(c)::BIGINT AS n, count(*)::BIGINT AS ntypes,
@@ -1237,7 +1222,7 @@ def _curate_sql() -> str:
         for b in range(bands))
     return f"""
 WITH src AS (SELECT doc_id, text, lang, source, n_chars FROM documents),
-w AS (SELECT doc_id, text, {WORDS_SQL} AS ws FROM documents),
+w AS (SELECT doc_id, text, {simple_words_sql()} AS ws FROM documents),
 qfeat AS (
   SELECT doc_id, length(text) AS qc, len(ws)::INT AS qw,
          CASE WHEN len(ws) > 0 THEN

@@ -18,6 +18,8 @@ import re
 from functools import lru_cache
 
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from .porter import porter_stem
 
@@ -27,7 +29,10 @@ STOPWORDS = frozenset(
     that the their then there these they this to was will with""".split()
 )
 
+# The simple word tokenizer: lowercase, split on [^a-z0-9]+, drop empties.
+# ``findall`` of the token class gives the same words as the split form.
 _TOKEN_RE = re.compile(r"[a-z0-9]+")
+_SPLIT_RE = r"[^a-z0-9]+"
 
 # --- extractor rule table (applied in order; shared by both twins) -----------
 # Each entry: (compiled regex, replacement). Applied on the utf-8-decoded,
@@ -88,9 +93,28 @@ def _stem_cached(tok: str) -> str:
     return porter_stem(tok)
 
 
-def tokenize(text: str, stem: bool = True, stop: bool = True) -> list[str]:
-    """lowercase -> [a-z0-9]+ -> stopword removal -> Porter stem."""
-    toks = _TOKEN_RE.findall(text.lower())
+def simple_words(col: Column | str) -> Column:
+    """The simple word tokenizer as a JVM expression: the token array of
+    ``tokenize(text, stem=False, stop=False)``. Null text is an empty
+    array (so ``size`` is 0 whatever ``spark.sql.ansi.enabled`` says)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.filter(F.split(F.lower(F.coalesce(c, F.lit(""))), _SPLIT_RE),
+                    lambda w: w != "")
+
+
+def simple_words_sql(expr: str = "text") -> str:
+    """DuckDB twin of ``simple_words``. DuckDB lowercases U+0130 to a bare
+    'i'; Java and Python give 'i' + U+0307 (Unicode's only unconditional
+    special-case lowercase mapping), so it is mapped before ``lower``."""
+    return (f"list_filter(string_split_regex(lower(replace("
+            f"coalesce({expr}, ''), chr(304), 'i' || chr(775))), "
+            f"'{_SPLIT_RE}'), w -> w != '')")
+
+
+def tokenize(text: str | None, stem: bool = True,
+             stop: bool = True) -> list[str]:
+    """lowercase -> simple words -> stopword removal -> Porter stem."""
+    toks = _TOKEN_RE.findall(text.lower()) if text else []
     if stop:
         toks = [t for t in toks if t not in STOPWORDS]
     if stem:

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.ranking import rank_desc
+
 
 def max_p(p: DataFrame) -> DataFrame:
     return p.groupBy("qid", "docid").agg(F.max("score").alias("score"))
@@ -36,11 +38,9 @@ def avg_p(p: DataFrame) -> DataFrame:
 def topk_p(p: DataFrame, k: int = 3) -> DataFrame:
     """Mean of the top-k passage scores (aggregation.py:54-62); ties broken
     by passage_idx asc for determinism."""
-    w = Window.partitionBy("qid", "docid").orderBy(
-        F.desc("score"), F.asc("passage_idx"))
     return (
-        p.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
+        rank_desc(p, "score", "passage_idx", by=("qid", "docid"), k=k,
+                  name="_r")
         .groupBy("qid", "docid")
         .agg(F.avg("score").alias("score"))
     )
@@ -70,13 +70,6 @@ def aggregate(p: DataFrame, strategy: str = "max", **kwargs) -> DataFrame:
     if strategy not in STRATEGIES:
         raise ValueError(f"unknown aggregation strategy: {strategy!r}")
     return STRATEGIES[strategy](p, **kwargs)
-
-
-def rank_by_score(run: DataFrame) -> DataFrame:
-    """(qid, docid, score) -> + 1-based rank, (score DESC, docid ASC)
-    (aggregation.py:131-139 with the engine's pinned tie-break)."""
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return run.withColumn("rank", F.row_number().over(w))
 
 
 def minmax_normalize(run: DataFrame, degenerate_preserve: bool = True) -> DataFrame:

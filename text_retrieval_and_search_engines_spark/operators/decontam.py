@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import simple_words, simple_words_sql
 from .dedup import h64, h64_sql
 
 NGRAM_SEED = "ng:"
@@ -61,12 +62,12 @@ def _gram_key(col: Column, hash_impl: str) -> Column:
 
 
 def word_ngram_array(text_col: Column, n: int) -> Column:
-    """Array of space-joined word n-grams of ``text_col`` (lowercased,
-    [^a-z0-9]+ split — the engine's pinned word tokenization). Empty array
-    when the doc has fewer than n words. Pure codegen: split + transform
-    over a sequence of window starts; no explode, no shuffle."""
-    words = F.filter(F.split(F.lower(text_col), r"[^a-z0-9]+"),
-                     lambda w: w != "")
+    """Array of space-joined word n-grams of ``text_col`` over
+    ``functions.text.simple_words`` (the engine's pinned word
+    tokenization). Empty array when the doc has fewer than n words. Pure
+    codegen: split + transform over a sequence of window starts; no
+    explode, no shuffle."""
+    words = simple_words(text_col)
     # sequence(0, size-n) DESCENDS when size < n (Spark semantics) — guard.
     grams = F.transform(
         F.sequence(F.lit(1), F.size(words) - (n - 1)),
@@ -77,8 +78,7 @@ def word_ngram_array(text_col: Column, n: int) -> Column:
 
 def ngram_sql(n: int, text_expr: str = "text") -> str:
     """DuckDB twin of word_ngram_array (1-based list_slice, same guard)."""
-    words = (f"list_filter(string_split_regex(lower({text_expr}), "
-             f"'[^a-z0-9]+'), w -> w != '')")
+    words = simple_words_sql(text_expr)
     return (
         f"CASE WHEN len({words}) >= {n} THEN "
         f"list_transform(generate_series(1, len({words}) - {n - 1}), "

@@ -42,6 +42,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import simple_words
+
 SHINGLE_K = 5
 MINHASH_N = 8
 LSH_BANDS = 4  # rows per band = MINHASH_N / LSH_BANDS
@@ -536,12 +538,10 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # groupBy(doc_id, term) exchange was pure overhead (guide §2.4);
     # identical (doc_id, term, tf) multiset, ONE shuffle (the vote agg)
     from ..plans.bm25_relational import explode_term_tf
-    words = F.filter(F.split(normalize_text(F.col(text_col)),
-                             r"[^a-z0-9]+"), lambda w: w != "")
     toks = (
         explode_term_tf(
             docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
-            words, keep=("doc_id",))
+            simple_words(text_col), keep=("doc_id",))
         .withColumn("tf", F.col("tf").cast("long"))
         .withColumn("h", h64(F.col("term"), "sh:"))
     )

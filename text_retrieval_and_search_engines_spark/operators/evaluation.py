@@ -21,16 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _ranked(run: DataFrame) -> DataFrame:
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return run.select("qid", "docid", "score").withColumn(
-        "rank", F.row_number().over(w))
+from ..functions.ranking import rank_desc
 
 
 def _with_rel(run: DataFrame, qrels: DataFrame) -> DataFrame:
     rel = qrels.select("qid", "docid", F.col("rel").cast("int").alias("rel"))
-    return (_ranked(run)
+    return (rank_desc(run.select("qid", "docid", "score"), "score", "docid")
             .join(rel, ["qid", "docid"], "left")
             .withColumn("rel", F.coalesce(F.col("rel"), F.lit(0)))
             .withColumn("is_rel", (F.col("rel") > 0).cast("int")))
@@ -81,11 +77,8 @@ def ndcg_at(run: DataFrame, qrels: DataFrame, k: int | None = None) -> DataFrame
         j = j.filter(F.col("rank") <= k)
     dcg = (j.withColumn("g", F.col("rel") / F.log2(F.col("rank") + 1))
            .groupBy("qid").agg(F.sum("g").alias("dcg")))
-    wi = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("docid"))
-    ideal = qrels.filter(F.col("rel") > 0).withColumn(
-        "irank", F.row_number().over(wi))
-    if k is not None:
-        ideal = ideal.filter(F.col("irank") <= k)
+    ideal = rank_desc(qrels.filter(F.col("rel") > 0), "rel", "docid", k=k,
+                      name="irank")
     idcg = (ideal.withColumn("g", F.col("rel") / F.log2(F.col("irank") + 1))
             .groupBy("qid").agg(F.sum("g").alias("idcg")))
     name = "ndcg" if k is None else f"ndcg_{k}"
@@ -116,9 +109,8 @@ def metric_suite(run: DataFrame, qrels: DataFrame, ndcg_k: int = 10,
                      F.col("is_rel"))).alias("p_hits"),
         F.sum(F.when(F.col("rank") <= r_k,
                      F.col("is_rel"))).alias("rel_ret"))
-    wi = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("docid"))
-    nr_idcg = (qrels.filter(F.col("rel") > 0)
-               .withColumn("irank", F.row_number().over(wi))
+    nr_idcg = (rank_desc(qrels.filter(F.col("rel") > 0), "rel", "docid",
+                         name="irank")
                .groupBy("qid").agg(
                    F.count("*").alias("num_rel"),
                    F.sum(F.when(F.col("irank") <= ndcg_k,

@@ -16,6 +16,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.ranking import rank_desc
+
 RRF_K_DEFAULT = 60  # reference src/config.py / main.py:92-96
 
 
@@ -24,15 +26,6 @@ def tag_runs(runs: dict[str, DataFrame]) -> DataFrame:
     tagged = [df.select(F.lit(rid).alias("run_id"), "qid", "docid", "score")
               for rid, df in runs.items()]
     return reduce(lambda a, b: a.unionByName(b), tagged)
-
-
-def _ranks(tagged: DataFrame) -> DataFrame:
-    """1-based rank by score desc within (run_id, qid); tie-break docid asc
-    (pinned total order — reference relies on stable dict/sort order,
-    fusion.py:28-33)."""
-    w = Window.partitionBy("run_id", "qid").orderBy(
-        F.desc("score"), F.asc("docid"))
-    return tagged.withColumn("rank", F.row_number().over(w))
 
 
 def _minmax_norm(tagged: DataFrame, degenerate: float = 0.5) -> DataFrame:
@@ -49,9 +42,11 @@ def _minmax_norm(tagged: DataFrame, degenerate: float = 0.5) -> DataFrame:
 
 
 def rrf(tagged: DataFrame, k: int = RRF_K_DEFAULT) -> DataFrame:
-    """Reciprocal-rank fusion: score(d) = sum over runs 1/(k + rank_r(d))."""
+    """Reciprocal-rank fusion: score(d) = sum over runs 1/(k + rank_r(d)),
+    rank_r within (run_id, qid) by the pinned total order (the reference
+    relies on stable dict/sort order, fusion.py:28-33)."""
     return (
-        _ranks(tagged)
+        rank_desc(tagged, "score", "docid", by=("run_id", "qid"))
         .groupBy("qid", "docid")
         .agg(F.sum(1.0 / (F.lit(float(k)) + F.col("rank"))).alias("score"))
     )
@@ -100,12 +95,3 @@ def fuse(tagged: DataFrame, method: str = "rrf", **kwargs) -> DataFrame:
     if method not in FUSION_METHODS:
         raise ValueError(f"unknown fusion method: {method!r}")
     return FUSION_METHODS[method](tagged, **kwargs)
-
-
-def rank_fused(fused: DataFrame, max_docs: int | None = None) -> DataFrame:
-    """Attach 1-based rank (score DESC, docid ASC) per qid; optional cap."""
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    out = fused.withColumn("rank", F.row_number().over(w))
-    if max_docs is not None:
-        out = out.filter(F.col("rank") <= max_docs)
-    return out

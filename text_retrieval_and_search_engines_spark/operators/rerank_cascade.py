@@ -24,6 +24,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.ranking import rank_desc
+
 ScorerFn = Callable[[DataFrame, DataFrame], DataFrame]
 KEY = ["qid", "docid", "passage_idx"]
 
@@ -302,10 +304,8 @@ def cascade(passages: DataFrame, queries: DataFrame,
     """N5: cheap filter -> expensive ensemble -> scatter back to ALL input
     passages (non-survivors 0.0)."""
     s1 = first_stage(passages, queries)
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("score"), F.asc("docid"), F.asc("passage_idx"))
-    survivors = (s1.withColumn("_r", F.row_number().over(w))
-                 .filter(F.col("_r") <= filter_k).select(*KEY))
+    survivors = rank_desc(s1, "score", "docid", "passage_idx", k=filter_k,
+                          name="_r").select(*KEY)
     surviving_passages = passages.join(survivors, KEY, "left_semi")
     scored = {name: fn(surviving_passages, queries)
               for name, fn in later_stages.items()}

@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.ranking import rank_desc
 
 
 def _dot(a, b):
@@ -47,9 +49,7 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
                     / (F.col("cn") * F.col("qn")))
         .select("qid", "nbr_id", "cosine")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return rank_desc(scored, "cosine", "nbr_id", k=k)
 
 
 def cosine_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
@@ -308,9 +308,7 @@ def _score_cells(corpus: DataFrame, queries: DataFrame, qcells: DataFrame,
         .withColumn("cosine", cos)
         .select("qid", "nbr_id", "cosine")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return rank_desc(scored, "cosine", "nbr_id", k=k)
 
 
 def ivf_cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
@@ -498,9 +496,7 @@ def _score_buckets(c: DataFrame, qq: DataFrame, k: int) -> DataFrame:
                     / (F.col("cn") * F.col("qn")))
         .select("qid", "nbr_id", "cosine")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return rank_desc(scored, "cosine", "nbr_id", k=k)
 
 
 def lsh_cosine_topk_margin(emb: DataFrame, queries: DataFrame, k: int = 5,

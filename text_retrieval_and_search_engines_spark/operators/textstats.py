@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import simple_words
+
 # tiny pinned function-word lists (n-gram-free heuristic language ID)
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "in", "is", "that", "for", "with", "was"),
@@ -27,9 +29,8 @@ def language_id(docs: DataFrame, id_col: str = "doc_id",
     """Heuristic language-ID: argmax over marker-word hit counts; 'und'
     (undetermined) when no markers hit. Deterministic tie-break: language
     code ascending. One split, per-language filtered counts (codegen)."""
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda w: w != "")
-    out = docs.select(F.col(id_col).alias("doc_id"), words.alias("_w"))
+    out = docs.select(F.col(id_col).alias("doc_id"),
+                      simple_words(text_col).alias("_w"))
     score_cols = []
     for lang in sorted(LANG_MARKERS):
         markers = list(LANG_MARKERS[lang])
@@ -54,8 +55,7 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id",
     maps instead of re-joining on doc_id (see operators/curate.py)."""
     t = F.col(text_col)
     n_chars = F.length(t)
-    words = F.split(F.lower(t), r"[^a-z0-9]+")
-    words = F.filter(words, lambda w: w != "")
+    words = simple_words(t)
     n_words = F.size(words)
     mean_wlen = F.when(n_words > 0,
                        F.aggregate(words, F.lit(0),
@@ -93,7 +93,7 @@ def token_counts(docs: DataFrame, id_col: str = "doc_id",
     costs ceil(L/4) subword tokens — the usual ~4-chars/token heuristic)."""
     t = F.col(text_col)
     ws = F.filter(F.split(t, r"\s+"), lambda w: w != "")
-    words = F.filter(F.split(F.lower(t), r"[^a-z0-9]+"), lambda w: w != "")
+    words = simple_words(t)
     bpe = F.aggregate(words, F.lit(0).cast("long"),
                       lambda acc, w: acc + F.ceil(F.length(w) / 4.0))
     return docs.select(
@@ -132,8 +132,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     (the registry's cross-engine float convention). ``keep`` passes input
     columns through so feature stages chain shuffle-free.
     """
-    t = F.col(text_col)
-    words = F.filter(F.split(F.lower(t), r"[^a-z0-9]+"), lambda w: w != "")
+    words = simple_words(text_col)
 
     def run_stats(arr_sql: str, prefix: str):
         """(n, ntypes, max_run, sum c*ln c) over a SORTED string array via

@@ -5,9 +5,10 @@ The engine's primary path scores compressed postings in Arrow kernels
 (reference ``final-project/src/bm25_retrieval.py:45-85`` + Lucene >=8 formula,
 SURVEY R5) as joins + aggregations only, so Catalyst owns the whole plan and
 an ANSI-SQL twin (DuckDB oracle) can verify it value-for-value. It uses the
-*simple* tokenizer (lowercase [a-z0-9]+ split, no stemming/stopwords) because
-the twin must be expressible in SQL; the stemmed analyzer path is pytest-
-verified against the Python oracle instead.
+*simple* tokenizer (``functions.text.simple_words`` and its SQL twin
+``simple_words_sql``: no stemming/stopwords) because the twin must be
+expressible in SQL; the stemmed analyzer path is pytest-verified against the
+Python oracle instead.
 
 Plan shape at scale: tokens explode is map-side; tf and df are hash aggs with
 partial combine; query terms broadcast; one shuffle for the per-(qid, doc)
@@ -17,8 +18,15 @@ SQL twin ranks identically despite float summation-order differences.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, StringType,
+                               StructField, StructType)
+
+from ..functions.ranking import rank_desc
+from ..functions.text import simple_words, simple_words_sql, tokenize
 
 K1_DEFAULT = 0.9
 B_DEFAULT = 0.4
@@ -27,19 +35,16 @@ B_DEFAULT = 0.4
 def simple_tokens(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """(doc_id, term) one row per token occurrence — JVM split+explode."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"),
-                     lambda w: w != "")
     return docs.select(F.col(id_col).alias("doc_id"),
-                       F.explode(words).alias("term"))
+                       F.explode(simple_words(text_col)).alias("term"))
 
 
 def simple_tokens_sql(table: str = "documents", id_col: str = "doc_id",
                       text_col: str = "text") -> str:
     """DuckDB twin of simple_tokens (a CTE body)."""
     return (
-        f"SELECT {id_col} AS doc_id, unnest(list_filter("
-        f"string_split_regex(lower({text_col}), '[^a-z0-9]+'), "
-        f"w -> w != '')) AS term FROM {table}"
+        f"SELECT {id_col} AS doc_id, unnest({simple_words_sql(text_col)}) "
+        f"AS term FROM {table}"
     )
 
 
@@ -94,9 +99,7 @@ def term_doc_stats(docs: DataFrame) -> DataFrame:
     is the term-keyed aggregate, whose map-side partial agg collapses each
     partition to its vocabulary (guide §2.3: the old plan exchanged every
     distinct (doc_id, term) pair, then exchanged again by term)."""
-    words = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                     lambda w: w != "")
-    return (explode_term_tf(docs, words)
+    return (explode_term_tf(docs, simple_words("text"))
             .groupBy("term")
             .agg(F.count("*").alias("df"),
                  F.sum("tf").alias("cf")))
@@ -138,21 +141,16 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[str, str]], k: int = 10,
     before ranking)."""
     spark = docs.sparkSession
 
-    qtok = []
-    for qid, text in queries:
-        terms = [w for w in __import__("re").split(r"[^a-z0-9]+", text.lower()) if w]
-        seen: dict[str, int] = {}
-        for t in terms:
-            seen[t] = seen.get(t, 0) + 1
-        for t, w in seen.items():
-            qtok.append((qid, t, float(w)))
+    qtok = [(qid, t, float(w)) for qid, text in queries
+            for t, w in Counter(tokenize(text, stem=False, stop=False)).items()]
     if not qtok:
-        return spark.createDataFrame(
-            [], "qid string, doc_id long, score double, rank int")
+        return spark.createDataFrame([], StructType([
+            StructField("qid", StringType()), docs.schema["doc_id"],
+            StructField("score", DoubleType()),
+            StructField("rank", IntegerType(), False)]))
     qterm_list = sorted({t for _, t, _ in qtok})
 
-    words = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-                     lambda w: w != "")
+    words = simple_words("text")
     # pass 1: collection stats + per-term presence in ONE aggregate job.
     # The token array binds as its own projection first — referencing the
     # split expression from every output column would re-tokenize the row
@@ -211,25 +209,17 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[str, str]], k: int = 10,
             [(q, c) for q, c in n_q.items()], "qid string, n_qterms long")
         scored = (scored.join(F.broadcast(n_qterms), "qid")
                   .filter(F.col("n_matched") == F.col("n_qterms")))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (scored.select("qid", "doc_id", "score")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return rank_desc(scored.select("qid", "doc_id", "score"), "score",
+                     "doc_id", k=k)
 
 
 def bm25_topk_sql(queries: list[tuple[str, str]], k: int = 10,
                   k1: float = K1_DEFAULT, b: float = B_DEFAULT,
                   mode: str = "or", table: str = "documents") -> str:
     """DuckDB twin of bm25_topk (same rounding + tie-break)."""
-    import re as _re
-    qrows = []
-    for qid, text in queries:
-        terms = [w for w in _re.split(r"[^a-z0-9]+", text.lower()) if w]
-        seen: dict[str, int] = {}
-        for t in terms:
-            seen[t] = seen.get(t, 0) + 1
-        for t, wgt in seen.items():
-            qrows.append(f"('{qid}', '{t}', {float(wgt)})")
+    qrows = [f"('{qid}', '{t}', {float(wgt)})" for qid, text in queries
+             for t, wgt in Counter(tokenize(text, stem=False,
+                                            stop=False)).items()]
     values = ", ".join(qrows)
     and_clause = (
         "JOIN nq USING (qid) WHERE s.n_matched = nq.n_qterms"

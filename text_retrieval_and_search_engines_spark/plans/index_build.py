@@ -107,7 +107,7 @@ class IndexConfig:
     n_term_buckets: int = 32           # postings partition-pruning buckets
     analyzer: str = "english"          # "english" (stop+Porter, the pinned
                                        # reference chain) | "simple"
-                                       # (lowercase [a-z0-9]+ only — the
+                                       # (simple_words tokens only — the
                                        # SQL-twinnable variant)
     langs: tuple[str, ...] = ("en",)   # analyzer is English (robust04)
     recompute_text: bool = True        # html -> text via pinned extractor

@@ -21,10 +21,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.ranking import rank_desc
+from ..functions.text import simple_words
 from ..operators.aggregation import (interpolate_rerank, max_p,
                                      minmax_normalize)
 from ..operators.evaluation import evaluate_run, mean_metrics
-from ..operators.fusion import rank_fused, rrf, tag_runs
+from ..operators.fusion import rrf, tag_runs
 from ..operators.passages import make_passages
 from ..sources.trec_io import write_run
 from .query import IndexReader, SearchParams, attach_urls, search, search_rm3
@@ -63,13 +65,9 @@ def lexical_overlap_reranker(passages: DataFrame, queries: DataFrame
     / |query terms| (simple split tokens). Replace with a Pandas-UDF model
     scorer (SURVEY N1-N5) when GPUs/models exist."""
     q = queries.select(
-        "qid",
-        F.array_distinct(F.filter(
-            F.split(F.lower("text"), r"[^a-z0-9]+"),
-            lambda w: w != "")).alias("qterms"))
+        "qid", F.array_distinct(simple_words("text")).alias("qterms"))
     p = passages.join(F.broadcast(q), "qid")
-    ptoks = F.filter(F.split(F.lower(F.col("passage_text")), r"[^a-z0-9]+"),
-                     lambda w: w != "")
+    ptoks = simple_words("passage_text")
     overlap = F.size(F.array_intersect(F.array_distinct(ptoks),
                                        F.col("qterms")))
     return p.select(
@@ -146,7 +144,7 @@ def run_pipeline(reader: IndexReader, queries: DataFrame,
         os.makedirs(out_dir, exist_ok=True)
         for name, run in (("run_1", run1), ("run_2", run2), ("run_3", run3)):
             with_urls = attach_urls(
-                reader, rank_fused(run, 1000)).select(
+                reader, rank_desc(run, "score", "docid", k=1000)).select(
                 "qid", F.col("url").alias("docid"), "score")
             write_run(with_urls, os.path.join(out_dir, f"{name}.res"), name)
     if qrels is not None:

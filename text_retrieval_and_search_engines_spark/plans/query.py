@@ -28,10 +28,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import codec
+from ..functions.ranking import rank_desc
 from ..functions.text import term_freqs, tokenize_series
 from ..sources.tables import Catalog
 
@@ -316,9 +317,7 @@ def _score_and_merge(reader: IndexReader, qt: DataFrame,
                   .repartition(n_shuffle, "qid", "range_id")
                   .sortWithinPartitions("qid", "range_id", "term")
                   .mapInArrow(bmw_kernel_arrow, schema=SCORED_SCHEMA))
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-        return (scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k))
+        return rank_desc(scored, "score", "docid", k=k)
 
     # Exhaustive scoring as a mapInArrow group-walk over rows sorted by
     # (qid, range_id, term) — NOT applyInPandas, whose ~10 ms per-group
@@ -449,12 +448,7 @@ def _score_and_merge(reader: IndexReader, qt: DataFrame,
               .repartition(n_shuffle, "qid", "range_id")
               .sortWithinPartitions("qid", "range_id", "term")
               .mapInArrow(score_kernel_arrow, schema=SCORED_SCHEMA))
-
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_desc(scored, "score", "docid", k=k)
 
 
 def search_terms(reader: IndexReader, qterms: DataFrame,
@@ -558,7 +552,7 @@ def rm3_expand(reader: IndexReader, queries: DataFrame, docs: DataFrame,
     # expansion terms never match the postings (simple vs stemmed english)
     do_stem = reader.analyzer != "simple"
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (qid,) = key
         qtf = term_freqs(list(tokenize_series(
             pd.Series([pdf["query_text"].iloc[0]]),

@@ -15,17 +15,28 @@ os.environ.setdefault("MALLOC_ARENA_MAX", "1")
 
 def get_spark(app_name: str = "text-retrieval-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    """Local session tuned for this sandbox; on a real cluster, spark-submit
-    conf wins (we only set semantic configs unconditionally)."""
+    """Local session tuned for one host; on a real cluster, spark-submit
+    conf wins (we only set semantic configs unconditionally).
+
+    Semantic pins (results depend on them, so they never follow a default):
+
+    * ``spark.sql.session.timeZone=UTC`` — timestamps render as the oracle
+      twins expect.
+    * ``spark.sql.execution.arrow.pyspark.enabled=true`` — pandas
+      conversions go through Arrow, the path the UDF kernels are tested on.
+    * ``spark.sql.ansi.enabled=true`` — ANSI semantics (Spark 4's default):
+      ``size(null)`` is NULL rather than -1, and invalid casts and overflow
+      raise instead of yielding NULL."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle = shuffle_partitions or max(8, cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # semantic pins: UTC for oracle comparison; Arrow for pandas UDFs
+        # semantic pins (listed in the docstring)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -242,7 +242,7 @@ class Catalog:
                 for prefix in ("append-delta:", "append:", "neardup-sigs:"):
                     if fp.startswith(prefix):
                         return fp[len(prefix):] in old_tags
-                if "-metrics:" in fp:
+                if s["table"] == "metrics" and "-metrics:" in fp:
                     return fp.split("-metrics:", 1)[1] in old_tags
                 return False
 

@@ -12,16 +12,16 @@ qid order is ``(len(qid), qid)`` — string qids sort numerically that way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.ranking import rank_desc
 
 
 def format_run(run: DataFrame, run_name: str, max_docs: int = 1000) -> DataFrame:
     """(qid, docid, score) -> formatted TREC lines + sort keys."""
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
     return (
-        run.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= max_docs)
+        rank_desc(run, "score", "docid", k=max_docs)
         .select(
             F.length("qid").alias("_qlen"),
             "qid", "rank",
